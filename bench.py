@@ -98,11 +98,12 @@ BANDS = {
     "q_ml_top_full": 1.85,
     "q_dedup_exact": 1.45,
     # r10: re-anchored 2.2 -> 2.4 with leg-level provenance
-    # (profile_minhash.py; BASELINE.md "r10 adjudication"): in-sequence
-    # warm steady state measured 1.63-1.70 (matching the 1.567 r08
-    # anchor), standalone-warm 2.25-2.37 (the bench sequence itself warms
-    # python workers + page cache — sigs leg 2.0 cold vs 0.72 warm), so
-    # the r09 driver 2.352 was ambient-elevated in-sequence, not drift.
+    # (profile_minhash.py, in git history at fa9af1b; BASELINE.md "r10
+    # adjudication"): in-sequence warm steady state measured 1.63-1.70
+    # (matching the 1.567 r08 anchor), standalone-warm 2.25-2.37 (the
+    # bench sequence itself warms python workers + page cache — sigs leg
+    # 2.0 cold vs 0.72 warm), so the r09 official 2.352 was
+    # ambient-elevated in-sequence, not drift.
     # Band = 1.4 x 1.70 in-sequence ceiling.
     "q_dedup_approx_pairs": 2.4,
     "q_approx_sketches": 5.05,  # r14: 1.4 x 3.575 official (winnow n_fp carry + r13 banding confirmed; quiet re-read 3.190)

@@ -169,7 +169,7 @@ def test_near_dedup_stage_keeps_cluster_representatives(spark, sf_dir):
     per near-dup cluster and agree with the exact all-pairs pipeline the
     driver oracles (q_dedup_approx_pairs + CC min-id winners)."""
     from volga_spark.operators.components import connected_components
-    from volga_spark.operators.dedup import exact_jaccard_pairs, lsh_candidate_pairs, add_minhash
+    from volga_spark.operators.dedup import exact_jaccard_pairs, lsh_candidate_pairs, signatures
 
     d = load_table(spark, sf_dir, "documents")
     out = CurationSpec(stages=[{"op": "near_dedup", "threshold": 0.7}]).build(
@@ -177,11 +177,11 @@ def test_near_dedup_stage_keeps_cluster_representatives(spark, sf_dir):
     )
     kept = {r["doc_id"] for r in out.select("doc_id").collect()}
 
-    sigs = add_minhash(d, "text", "doc_id")
+    sigs = signatures(d.select("doc_id", "text"), "text", ("minhash",))
     pairs = (
         exact_jaccard_pairs(
             d,
-            lsh_candidate_pairs(sigs.select("doc_id", "signature"), "doc_id"),
+            lsh_candidate_pairs(sigs, "doc_id"),
             "text",
             "doc_id",
             n=3,

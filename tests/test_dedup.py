@@ -11,13 +11,13 @@ from pyspark.sql import functions as F
 
 from volga_spark.operators.dedup import (
     _perm_params,
-    add_minhash,
-    add_simhash,
     exact_jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signature,
+    signatures,
     simhash64,
     simhash_candidates,
+    winnow_fingerprints,
 )
 
 
@@ -38,7 +38,7 @@ def corpus(spark):
 def test_minhash_signature_matches_python_reference(spark, corpus):
     sigs = {
         r.doc_id: r.signature
-        for r in add_minhash(corpus, "text", "doc_id", k=64).select("doc_id", "signature").collect()
+        for r in signatures(corpus, "text", ("minhash",), k=64).collect()
     }
     a, b = _perm_params(64)
     for doc_id, text in [(0, None)]:
@@ -50,8 +50,8 @@ def test_minhash_signature_matches_python_reference(spark, corpus):
 
 
 def test_lsh_finds_near_and_exact_dups(spark, corpus):
-    sigs = add_minhash(corpus, "text", "doc_id", k=64)
-    cands = lsh_candidate_pairs(sigs.select("doc_id", "signature"), "doc_id")
+    sigs = signatures(corpus, "text", ("minhash",), k=64)
+    cands = lsh_candidate_pairs(sigs, "doc_id")
     pairs = {(r.id_a, r.id_b) for r in cands.collect()}
     assert (2, 3) in pairs  # exact dup always collides
     assert (0, 1) in pairs  # high-jaccard near-dup collides at 16x4
@@ -62,12 +62,12 @@ def test_lsh_finds_near_and_exact_dups(spark, corpus):
 
 
 def test_simhash_matches_python_and_finds_dups(spark, corpus):
-    sh = add_simhash(corpus, "text", "doc_id")
-    got = {r.doc_id: r.simhash for r in sh.select("doc_id", "simhash").collect()}
+    sh = signatures(corpus, "text", ("simhash",))
+    got = {r.doc_id: r.simhash for r in sh.collect()}
     texts = {r.doc_id: r.text for r in corpus.collect()}
     for doc_id, text in texts.items():
         assert got[doc_id] == simhash64(text), doc_id
-    cands = simhash_candidates(sh.select("doc_id", "simhash"), "doc_id")
+    cands = simhash_candidates(sh, "doc_id")
     pairs = {(r.id_a, r.id_b) for r in cands.collect()}
     assert (2, 3) in pairs
     a = sh.filter(F.col("doc_id") == 0).collect()[0].simhash
@@ -76,12 +76,8 @@ def test_simhash_matches_python_and_finds_dups(spark, corpus):
 
 
 def test_winnow_fingerprints_match_python_and_detect_overlap(spark, corpus):
-    from volga_spark.operators.dedup import add_winnow_fingerprints, winnow_fingerprints
-
-    fps = add_winnow_fingerprints(corpus, "text", "doc_id")
-    got = {}
-    for r in fps.collect():
-        got.setdefault(r.doc_id, set()).add(r.fp)
+    fps = signatures(corpus, "text", ("winnow",))
+    got = {r.doc_id: set(r.winnow_fps) for r in fps.collect()}
     texts = {r.doc_id: r.text for r in corpus.collect()}
     for doc_id, text in texts.items():
         assert got[doc_id] == set(winnow_fingerprints(text)), doc_id
@@ -201,10 +197,7 @@ def test_winnow_skew_guard_prunes_boilerplate(spark):
     still find true near-dup pairs through their distinctive content."""
     import warnings as _warnings
 
-    from volga_spark.operators.dedup import (
-        add_winnow_fingerprints,
-        winnow_candidate_pairs,
-    )
+    from volga_spark.operators.dedup import winnow_candidate_pairs
 
     boiler = "the quick brown fox jumps over the lazy dog " * 30
     docs = [
@@ -215,7 +208,9 @@ def test_winnow_skew_guard_prunes_boilerplate(spark):
     docs.append((100, vol))
     docs.append((101, vol + " plus one extra trailing sentence"))
     df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    fps = add_winnow_fingerprints(df, "text", "doc_id")
+    fps = signatures(df, "text", ("winnow",)).select(
+        "doc_id", F.explode("winnow_fps").alias("fp")
+    )
 
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
@@ -243,9 +238,7 @@ def test_winnow_skew_guard_prunes_boilerplate(spark):
 def test_simhash_band_guard_and_fused_verify(spark, corpus):
     import pytest as _pytest
 
-    from volga_spark.operators.dedup import add_simhash, simhash_candidates
-
-    sh = add_simhash(corpus, "text", "doc_id").select("doc_id", "simhash")
+    sh = signatures(corpus, "text", ("simhash",))
     # bands must divide 64 (banding scale rule is meaningless otherwise)
     with _pytest.raises(ValueError, match="divide 64"):
         simhash_candidates(sh, "doc_id", bands=5)
@@ -266,35 +259,77 @@ def test_simhash_band_guard_and_fused_verify(spark, corpus):
     assert fused == unfused and (2, 3, 0) in fused
 
 
-def test_add_signatures_matches_single_method_generators(spark, sf_dir):
-    """The one-pass signature frame must be bit-identical to the three
-    single-method generators (shared tokenization changes nothing)."""
-    from volga_spark.operators.dedup import (
-        add_minhash,
-        add_signatures,
-        add_simhash,
-        add_winnow_fingerprints,
-    )
+def test_signatures_match_scalar_references(spark, sf_dir):
+    """The one signature pass, all families requested, against the scalar
+    references on an 80-document sample: MinHash == minhash_signature,
+    SimHash == simhash64, winnow_fps == the sorted distinct
+    winnow_fingerprints, grams == one hash per distinct word 3-gram."""
+    from volga_spark.operators.dedup import word_shingles
     from volga_spark.tables import load_table
-    from pyspark.sql import functions as F
 
-    d = load_table(spark, sf_dir, "documents").limit(80)
-    one = {
-        r["doc_id"]: r
-        for r in add_signatures(d, "text", "doc_id", k=64, n=3).collect()
+    rows = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(80).collect()
+    d = spark.createDataFrame(rows, "doc_id bigint, text string")
+    out = signatures(
+        d, "text", ("grams", "winnow", "simhash", "minhash"), k=64, n=3
+    )
+    # canonical column order whatever the request order; text is consumed
+    assert out.columns == ["doc_id", "signature", "simhash", "winnow_fps", "grams"]
+    got = {r["doc_id"]: r for r in out.collect()}
+    texts = {r["doc_id"]: r["text"] for r in rows}
+    assert set(got) == set(texts) and len(texts) == 80
+    a, b = _perm_params(64)
+    for i, text in texts.items():
+        r = got[i]
+        assert r["signature"] == minhash_signature(text, 64, a, b, n=3).tolist(), i
+        assert r["simhash"] == simhash64(text), i
+        assert r["winnow_fps"] == sorted(set(winnow_fingerprints(text))), i
+        assert len(r["grams"]) == len(set(word_shingles(text))), i
+    with pytest.raises(ValueError, match="signature families"):
+        signatures(d, "text", ("minhash", "bogus"))
+
+
+def test_candidate_core_one_bucket_exchange_no_sort_merge(spark, corpus):
+    """The shared candidate core keeps r13's "one exchange, no sort" shape
+    for every family: the bucket rows cross exactly one exchange on the
+    bucket key, below the in-stage pair expansion, and no pair comes from
+    a sort-merge self-join. (Within-set grams are broadcast, the streaming
+    shape, so its verify joins cannot be sort-merge either.)"""
+    import re
+
+    from volga_spark.operators.dedup import (
+        banded_buckets,
+        winnow_candidate_pairs,
+        within_set_verified_pairs,
+    )
+
+    sigs = signatures(corpus, "text", ("minhash", "simhash", "winnow", "grams"))
+    fps = sigs.select(
+        "doc_id",
+        F.size("winnow_fps").cast("bigint").alias("n_fp"),
+        F.explode("winnow_fps").alias("fp"),
+    )
+    within = within_set_verified_pairs(
+        banded_buckets(sigs, "doc_id"), sigs, "doc_id", 0.7, broadcast_grams=True
+    )
+    cases = {
+        "lsh": (lsh_candidate_pairs(sigs, "doc_id"), ["band", "bucket"]),
+        # the cold-path chunk2 is a constant the planner folds into the key
+        "simhash": (
+            simhash_candidates(sigs, "doc_id", bands=4, radius=3),
+            ["band", "chunk"],
+        ),
+        "winnow": (winnow_candidate_pairs(fps, "doc_id")[0], ["fp"]),
+        "within_set": (within, ["band", "bucket"]),
     }
-    mh = {r["doc_id"]: r["signature"] for r in add_minhash(d, "text", "doc_id", k=64, n=3)
-          .select("doc_id", "signature").collect()}
-    sh = {r["doc_id"]: r["simhash"] for r in add_simhash(d, "text", "doc_id")
-          .select("doc_id", "simhash").collect()}
-    wf = {}
-    for r in add_winnow_fingerprints(d, "text", "doc_id").collect():
-        wf.setdefault(r["doc_id"], set()).add(r["fp"])
-    assert set(one) == set(mh)
-    for i, r in one.items():
-        assert r["signature"] == mh[i]
-        assert r["simhash"] == sh[i]
-        assert set(r["winnow_fps"]) == wf[i]
+    for name, (df, key) in cases.items():
+        p = df._jdf.queryExecution().executedPlan().toString()
+        keyed = r"Exchange hashpartitioning\(" + ", ".join(
+            rf"{c}#\d+L?" for c in key
+        ) + ","
+        hits = [m.start() for m in re.finditer(keyed, p)]
+        assert len(hits) == 1, (name, p)
+        assert "SortMergeJoin" not in p, (name, p)
+        assert -1 < p.find("Generate explode") < hits[0], (name, p)
 
 
 def test_lsh_hot_bucket_split_exact(spark, corpus):
@@ -303,9 +338,7 @@ def test_lsh_hot_bucket_split_exact(spark, corpus):
     the member list in one collect_list buffer — the pair set must be
     IDENTICAL (the split is exact, unlike simhash's recall-trading
     prefix-split)."""
-    sigs = add_minhash(corpus, "text", "doc_id", k=64).select(
-        "doc_id", "signature"
-    )
+    sigs = signatures(corpus, "text", ("minhash",), k=64)
     base = {
         (r.id_a, r.id_b)
         for r in lsh_candidate_pairs(sigs, "doc_id").collect()
@@ -328,27 +361,13 @@ def test_lsh_hot_bucket_split_exact(spark, corpus):
     assert mixed == base
 
 
-def test_lsh_hot_bucket_env_rejects_malformed_value(spark, corpus, monkeypatch):
-    """A malformed $SPARK_GRAFT_LSH_HOT_BUCKET names itself in the error
-    instead of surfacing a context-free int() ValueError from inside every
-    LSH call; surrounding whitespace is tolerated."""
-    import pytest
-
-    sigs = add_minhash(corpus, "text", "doc_id", k=64).select(
-        "doc_id", "signature"
-    )
-    monkeypatch.setenv("SPARK_GRAFT_LSH_HOT_BUCKET", "100k")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_LSH_HOT_BUCKET"):
-        lsh_candidate_pairs(sigs, "doc_id")
-    monkeypatch.setenv("SPARK_GRAFT_LSH_HOT_BUCKET", " 1 ")
-    base_env = {
-        (r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, "doc_id").collect()
-    }
-    monkeypatch.delenv("SPARK_GRAFT_LSH_HOT_BUCKET")
-    base = {
-        (r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, "doc_id").collect()
-    }
-    assert base_env == base and base
+def test_lsh_hot_bucket_threshold_rejects_non_positive(spark, corpus):
+    """A threshold <= 0 would send every bucket down the hot self-join path
+    (exact but pathological): it fails loudly and names the knob."""
+    sigs = signatures(corpus, "text", ("minhash",), k=64)
+    for bad in (0, -5):
+        with pytest.raises(ValueError, match="hot_bucket_threshold"):
+            lsh_candidate_pairs(sigs, "doc_id", hot_bucket_threshold=bad)
 
 
 def test_lsh_hot_bucket_no_collect_list_for_hot(spark):
@@ -361,6 +380,6 @@ def test_lsh_hot_bucket_no_collect_list_for_hot(spark):
     n = 2000
     rows = [(i, "same words everywhere all the time again and again") for i in range(n)]
     docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sigs = add_minhash(docs, "text", "doc_id", k=64).select("doc_id", "signature")
+    sigs = signatures(docs, "text", ("minhash",), k=64)
     pairs = lsh_candidate_pairs(sigs, "doc_id", hot_bucket_threshold=100)
     assert pairs.count() == n * (n - 1) // 2

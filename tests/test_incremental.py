@@ -14,8 +14,8 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from volga_spark.operators.dedup import add_minhash, lsh_candidate_pairs
-from volga_spark.operators.incremental import NearDupIndex, banded_buckets
+from volga_spark.operators.dedup import banded_buckets, lsh_candidate_pairs, signatures
+from volga_spark.operators.incremental import NearDupIndex
 from volga_spark.tables import load_table
 
 BANDS, ROWS, K = 16, 4, 64
@@ -38,7 +38,7 @@ def _corpus(spark, sf_dir):
 
 
 def _sig_map(df):
-    rows = add_minhash(df, "text", "doc_id", k=K).select("doc_id", "signature").collect()
+    rows = signatures(df.select("doc_id", "text"), "text", ("minhash",), k=K).collect()
     return {r["doc_id"]: tuple(r["signature"]) for r in rows}
 
 
@@ -101,9 +101,8 @@ def test_incremental_gate_matches_reference(spark, sf_dir, index_path):
 
 
 def test_banding_mirrors_lsh_candidate_pairs(spark, sf_dir):
-    sig = add_minhash(
-        load_table(spark, sf_dir, "documents").limit(30), "text", "doc_id", k=K
-    ).localCheckpoint(eager=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(30)
+    sig = signatures(docs, "text", ("minhash",), k=K).localCheckpoint(eager=True)
     expected = {
         (r["id_a"], r["id_b"])
         for r in lsh_candidate_pairs(sig, "doc_id", BANDS, ROWS).collect()
@@ -129,7 +128,7 @@ def test_index_probe_broadcasts_batch_side(spark, sf_dir, index_path):
     corpus = _corpus(spark, sf_dir)
     nd = NearDupIndex(spark, index_path, bands=BANDS, rows=ROWS, k=K)
     nd.bootstrap(corpus.limit(20), "text", "doc_id")
-    sig = add_minhash(corpus.limit(5), "text", "doc_id", k=K)
+    sig = signatures(corpus.limit(5), "text", ("minhash",), k=K)
     nb = banded_buckets(sig, "doc_id", BANDS, ROWS).alias("n")
     idx = nd.index_buckets().alias("i")
     probe = idx.join(

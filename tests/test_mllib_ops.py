@@ -36,10 +36,10 @@ def test_mllib_minhash_agrees_with_exact_jaccard(spark, sf_dir):
         assert abs(exact[(r.id_a, r.id_b)] - r.jaccard) < 0.1, r
 
     # recall vs the hand-rolled pipeline's verified near-dups
-    from volga_spark.operators.dedup import add_minhash, lsh_candidate_pairs
+    from volga_spark.operators.dedup import lsh_candidate_pairs, signatures
 
-    sigs = add_minhash(d, "text", "doc_id", k=64, n=3)
-    cands = lsh_candidate_pairs(sigs.select("doc_id", "signature"), "doc_id")
+    sigs = signatures(d.select("doc_id", "text"), "text", ("minhash",), k=64, n=3)
+    cands = lsh_candidate_pairs(sigs, "doc_id")
     truth = {
         (r.id_a, r.id_b)
         for r in exact_jaccard_pairs(d, cands, "text", "doc_id", n=3)

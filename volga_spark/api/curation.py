@@ -154,15 +154,16 @@ def _stage_near_dedup(
         raise ValueError(f"near_dedup mode must be 'hard' or 'soft': {mode!r}")
     from volga_spark.operators.components import connected_components
     from volga_spark.operators.dedup import (
-        _band_buckets,
-        add_minhash_and_grams,
+        banded_buckets,
+        signatures,
         within_set_verified_pairs,
     )
 
-    sigs = add_minhash_and_grams(
-        df, spec.text_col, spec.id_col, k=k, n=n
+    sigs = signatures(
+        df.select(spec.id_col, spec.text_col), spec.text_col,
+        ("minhash", "grams"), k=k, n=n,
     ).localCheckpoint(eager=False)
-    banded = _band_buckets(sigs, spec.id_col, bands, k // bands)
+    banded = banded_buckets(sigs, spec.id_col, bands, k // bands)
     # the ONE within-set candidate+verify semantics, shared with the
     # streaming ingest twin (dedup.neardup_stream_filter)
     pairs = within_set_verified_pairs(banded, sigs, spec.id_col, threshold)

@@ -95,8 +95,7 @@ def build_sequences(
         # mapInPandas is opaque to column pruning, so hashing through
         # base's lineage would re-run the whole BPE pass a second time;
         # the narrow select also sheds any pre-existing simhash column
-        # (dedup outputs carry one) that would make add_simhash's join
-        # ambiguous
+        # (dedup outputs carry one)
         ranks = simhash_rank(
             docs.select(id_col, text_col), text_col=text_col, id_col=id_col
         ).select(id_col, "rank")

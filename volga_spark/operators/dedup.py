@@ -1,20 +1,34 @@
 """Deduplication operators for training-data pipelines.
 
-Four tiers, each a standard LLM-corpus technique:
+Exact dedup groups on a content fingerprint (md5) and keeps the smallest
+id; shuffle keys are 16-byte digests, never the documents themselves.
 
-1. **Exact** — group on a content fingerprint (md5), keep the smallest id.
-   At 100 TB: shuffle keys are 16-byte digests, never the documents
-   themselves; partial aggregation makes the shuffle ~|unique| sized.
-2. **MinHash + LSH** — word-shingle signatures, banded into buckets; only
-   same-bucket pairs are candidates (the classic near-linear near-dup join).
-   Signatures are computed in one mapInPandas pass (numpy, Arrow-batched);
-   banding/bucketing/joining stay DataFrame ops, so the candidate join is a
-   plain shuffle join on (band, bucket-hash) — no pairwise blowup.
-3. **SimHash** — 64-bit weighted-token signature; near-dups = signatures
-   within a Hamming radius, candidates via band-of-bits buckets.
-4. **n-gram Jaccard verify** — exact similarity on candidate pairs only.
+The near-dup tier is one filter→verify core (the filter/verify split of
+"Highly Efficient String Similarity Search and Join over Compressed
+Indexes", ICDE 2022) that each family parameterises:
 
-Hashing is a fixed-seed 61-bit multiplicative scheme over md5 digests —
+1. **Signature pass** — `signatures`: ONE Python pass (numpy,
+   Arrow-batched, token digests cached per partition) emits only the
+   requested families: MinHash-k over word-shingle hashes, the 64-bit
+   SimHash, winnowing fingerprints, and the distinct shingle-hash set.
+   The scalar functions `minhash_signature`, `simhash64` and
+   `winnow_fingerprints` are the independent test oracles.
+2. **Bucket** — `banded_buckets` cuts MinHash signatures into LSH band
+   buckets (the one banding: batch pairs, the within-set verify, the
+   streaming filter and the incremental index agree on bucket ids);
+   SimHash buckets on 64/bands-bit chunks; winnowing on the fingerprint.
+3. **Candidate pairs** — `_bucket_pairs`: one groupBy on the bucket key,
+   the member list expanded to ordered pairs in-stage (one exchange, no
+   sort), with LSH's exact hot-bucket self-join split as an option.
+4. **Verify** — exact n-gram Jaccard (`exact_jaccard_pairs`), the native
+   gram-set Jaccard (`within_set_verified_pairs`), a fused Hamming
+   filter, or winnow containment.
+
+Exact-substring dedup (`duplicated_ngram_spans`, `remove_duplicated_spans`)
+shares one stride-1 positional gram hasher; decontamination and CCNet
+paragraph dedup close the module.
+
+Hashing is a fixed-seed 31-bit multiplicative scheme over md5 digests —
 deterministic across engines/processes (Python's builtin hash() is salted;
 never use it in distributed code).
 """
@@ -29,6 +43,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from volga_spark.partitioning import widen_for_python
 
@@ -97,43 +112,214 @@ def minhash_signature(text: str, k: int, a: np.ndarray, b: np.ndarray, n: int = 
     return np.min(m, axis=1)
 
 
-def add_minhash(df: DataFrame, text_col: str, id_col: str, k: int = 64, n: int = 3) -> DataFrame:
-    """(id, signature array<bigint>) rows — one mapInPandas pass. Token md5
-    hashes are cached across the whole Arrow batch stream, so each unique
-    token is digested once per partition.
+# output column and type of each signature family, in emission order
+_FAMILIES = {
+    "minhash": ("signature", T.ArrayType(T.LongType())),
+    "simhash": ("simhash", T.LongType()),
+    "winnow": ("winnow_fps", T.ArrayType(T.LongType())),
+    "grams": ("grams", T.ArrayType(T.LongType())),
+}
 
-    r13 optimization round: this used to JOIN the signatures back onto the
-    caller's frame — a full shuffle of the corpus INCLUDING the text column
-    on both join sides, paid by every caller even though all of them
-    immediately projected back down to (id, signature). The slim frame is
-    now returned directly (minimum bytes in AND out of the Python stage,
-    zero joins); a caller that wants other columns joins on the id itself."""
+
+def signatures(
+    df: DataFrame,
+    text_col: str,
+    families: tuple[str, ...],
+    k: int = 64,
+    n: int = 3,
+    winnow_k: int = 5,
+    winnow_window: int = 8,
+) -> DataFrame:
+    """``df``'s columns minus ``text_col``, plus one column per requested
+    family, from ONE Arrow-batched Python pass:
+
+    - ``"minhash"`` → ``signature array<bigint>``: MinHash-k over the
+      distinct word n-gram shingle hashes (== ``minhash_signature``);
+    - ``"simhash"`` → ``simhash bigint``: 64-bit SimHash over distinct
+      whitespace tokens (== ``simhash64``);
+    - ``"winnow"`` → ``winnow_fps array<bigint>``: sorted distinct
+      winnowing fingerprints (== ``set(winnow_fingerprints)``);
+    - ``"grams"`` → ``grams array<bigint>``: the distinct shingle-hash set,
+      for an exact (modulo int-hash collisions) native Jaccard verify.
+
+    Columns come out in that order whatever the order of ``families``.
+    Every other column passes THROUGH the Python stage — the text is
+    consumed and never shipped back, so no caller joins the signatures
+    back on (a pre-existing column of an emitted name is replaced). A
+    caller that wants the slim ``(id, signatures)`` frame projects
+    ``(id, text)`` first: the Python stage then receives exactly those two
+    columns. Token md5 digests are cached across the whole Arrow batch
+    stream, so each unique token is digested once per partition, and a
+    multi-family pass pays the scan, split and Arrow transfer once."""
     import volga_spark.operators.dedup as _self
 
     register_by_value(_self)
+    unknown = set(families) - set(_FAMILIES)
+    if unknown or not families:
+        raise ValueError(
+            f"signature families must be a non-empty subset of "
+            f"{list(_FAMILIES)}, got {list(families)}"
+        )
+    emit = [f for f in _FAMILIES if f in families]
+    out = [T.StructField(*_FAMILIES[f]) for f in emit]
+    replaced = {text_col} | {o.name for o in out}
+    keep = [f for f in df.schema.fields if f.name not in replaced]
+    keep_names = [f.name for f in keep]
+    shingled = "minhash" in emit or "grams" in emit
     a, b = _perm_params(k)
-    schema = f"{id_col} bigint, signature array<bigint>"
+    shifts = np.arange(64, dtype=np.uint64)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tok_h: dict[str, int] = {}
+        tok_bits: dict = {}
         for pdf in batches:
-            sigs = []
+            cols: dict[str, list] = {f: [] for f in emit}
             for t in pdf[text_col]:
                 toks = t.split()
-                for tok in toks:
-                    if tok not in tok_h:
-                        tok_h[tok] = _stable_h61(tok)
-                hv = _shingle_hashes(toks, n, tok_h)
-                if hv.size == 0:
-                    sigs.append([MERSENNE] * k)
-                else:
-                    m = (hv[None, :] * a[:, None] + b[:, None]) % MERSENNE
-                    sigs.append(np.min(m, axis=1).tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], "signature": sigs})
+                if shingled:
+                    for tok in toks:
+                        if tok not in tok_h:
+                            tok_h[tok] = _stable_h61(tok)
+                    hv = _shingle_hashes(toks, n, tok_h)
+                if "minhash" in cols:
+                    if hv.size == 0:
+                        cols["minhash"].append([MERSENNE] * k)
+                    else:
+                        m = (hv[None, :] * a[:, None] + b[:, None]) % MERSENNE
+                        cols["minhash"].append(np.min(m, axis=1).tolist())
+                if "simhash" in cols:
+                    rows = []
+                    for tok in set(toks):
+                        bv = tok_bits.get(tok)
+                        if bv is None:
+                            h = int.from_bytes(
+                                hashlib.md5(tok.encode()).digest()[:8], "little"
+                            )
+                            bv = ((np.uint64(h) >> shifts) & np.uint64(1)).astype(
+                                np.int8
+                            ) * 2 - 1
+                            tok_bits[tok] = bv
+                        rows.append(bv)
+                    acc = (
+                        np.sum(np.stack(rows), axis=0, dtype=np.int64)
+                        if rows
+                        else np.zeros(64, dtype=np.int64)
+                    )
+                    v = 0
+                    for i in np.flatnonzero(acc > 0):
+                        v |= 1 << int(i)
+                    cols["simhash"].append(v - (1 << 63))
+                if "winnow" in cols:
+                    cols["winnow"].append(
+                        sorted(set(winnow_fingerprints_np(t, winnow_k, winnow_window)))
+                    )
+                if "grams" in cols:
+                    cols["grams"].append(hv.tolist())
+            yield pd.DataFrame(
+                {c: pdf[c] for c in keep_names}
+                | {_FAMILIES[f][0]: cols[f] for f in emit}
+            )
 
-    return widen_for_python(df.select(id_col, text_col)).mapInPandas(
-        gen, schema=schema
+    return widen_for_python(df).mapInPandas(gen, schema=T.StructType(keep + out))
+
+
+def banded_buckets(
+    sig_df: DataFrame, id_col: str, bands: int = 16, rows: int = 4
+) -> DataFrame:
+    """(id, band, bucket) LSH rows: the ``signature`` column cut into
+    ``bands`` slices of ``rows`` values, each slice hashed together with
+    its band index. bands*rows must equal the signature length. THE one
+    banding — batch candidate pairs, the within-set verify, the streaming
+    ingest filter and the incremental index all call it, so their bucket
+    ids agree."""
+    return sig_df.select(
+        F.col(id_col),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda i: F.slice(F.col("signature"), i * rows + 1, rows),
+            )
+        ).alias("band", "chunk"),
+    ).select(id_col, "band", F.hash("band", "chunk").alias("bucket"))
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    key: list[str],
+    member,
+    a: str,
+    b: str,
+    hot_bucket_threshold: int | None = None,
+) -> DataFrame:
+    """Every ordered member pair sharing a bucket, as columns (``a``, ``b``)
+    — the candidate core of all four near-dup families. ``member`` is
+    either the id column's name (pairs are bare ids) or a struct Column
+    whose ``id`` field orders the pair (its other fields ride along for a
+    fused verify). Pairs repeat once per shared bucket; callers
+    deduplicate or count them.
+
+    Each bucket is grouped ONCE on ``key`` and its member list expanded to
+    ordered pairs in-stage: one exchange of the bucket rows, no sort, and
+    a single consumer, so an upstream Python signature stage feeds
+    straight through with no pin. A bucket self-join would produce the
+    same pairs with a checkpoint, two exchanges and a sort-merge.
+    Per-bucket memory is the member list (8 bytes per bare id); the
+    quadratic pair expansion is generated pipelined.
+
+    ``hot_bucket_threshold`` (r14 memory guard): one degenerate bucket
+    (boilerplate near-identical docs) of 10^8 members is ~800 MB of list
+    buffer in one task. With a threshold, bucket sizes are counted first
+    and buckets ABOVE it pair through the streaming self-join, which never
+    holds the member list, while cold buckets keep the grouped expansion.
+    The pair set is IDENTICAL either way (an exact split, unlike SimHash's
+    recall-trading prefix split). Cost: one histogram aggregation and a
+    checkpoint of the bucket rows, which is why it is off by default —
+    worth it once the largest bucket reaches ~100k members."""
+    if hot_bucket_threshold is not None and hot_bucket_threshold <= 0:
+        raise ValueError(
+            "hot_bucket_threshold must be a positive bucket size, got "
+            f"{hot_bucket_threshold}"
+        )
+    bare = isinstance(member, str)
+    lst = "ids" if bare else "ms"
+    m = F.col(member) if bare else member
+    ordered = (
+        F.col(a) < F.col(b) if bare else F.col(f"{a}.id") < F.col(f"{b}.id")
     )
+    cold, hot = rows, None
+    if hot_bucket_threshold is not None:
+        # the rows feed two consumers (histogram and pairing) — pin so an
+        # upstream Python stage runs once; the hot key set is tiny by
+        # construction — broadcast
+        rows = rows.localCheckpoint(eager=False)
+        hot_keys = (
+            rows.groupBy(*key)
+            .count()
+            .filter(F.col("count") > hot_bucket_threshold)
+            .select(*key, F.lit(True).alias("__hot"))
+        )
+        flagged = rows.join(F.broadcast(hot_keys), key, "left").localCheckpoint(
+            eager=False
+        )
+        cold = flagged.filter(F.col("__hot").isNull()).drop("__hot")
+        hot = flagged.filter(F.col("__hot")).drop("__hot")
+    pairs = (
+        cold.groupBy(*key)
+        .agg(F.collect_list(m).alias(lst))
+        .filter(F.size(lst) >= 2)
+        .select(F.explode(lst).alias(a), lst)
+        .select(a, F.explode(lst).alias(b))
+        .filter(ordered)
+    )
+    if hot is not None:
+        hot_pairs = (
+            hot.select(*key, m.alias(a))
+            .join(hot.select(*key, m.alias(b)), key)
+            .filter(ordered)
+            .select(a, b)
+        )
+        pairs = pairs.unionByName(hot_pairs)
+    return pairs
 
 
 def lsh_candidate_pairs(
@@ -143,94 +329,21 @@ def lsh_candidate_pairs(
     rows: int = 4,
     hot_bucket_threshold: int | None = None,
 ) -> DataFrame:
-    """Band the signature, bucket the banded rows, emit candidate (a, b) id
-    pairs from within each bucket.
+    """Distinct candidate (id_a < id_b) pairs sharing at least one LSH band
+    bucket of their MinHash ``signature``.
 
     bands*rows must equal the signature length. Collision probability for
     jaccard s is 1-(1-s^rows)^bands — 16x4 targets s ≳ 0.5.
-
-    r13 optimization round: this was a bucket SELF-JOIN — the banded rows
-    were checkpointed (the Python signature stage upstream would otherwise
-    run once per join side) and exchanged TWICE (once per side) plus
-    sorted for the sort-merge. Grouping each (band, bucket) once and
-    expanding the per-bucket id list to ordered pairs in-stage produces
-    the identical pair set with ONE exchange of the banded rows, no sort,
-    and — the banded rows now having a single consumer — no checkpoint, so
-    the signature stage feeds straight through. Per-bucket memory is the
-    id list (8 bytes/member); the quadratic pair EXPANSION is generated
-    pipelined, exactly as the join's output was.
-
-    ``hot_bucket_threshold`` (r14, the r13 verdict's memory guard): the
-    grouped shape materializes each bucket's FULL member list in one
-    aggregation buffer, and a single degenerate bucket (boilerplate
-    near-identical docs) of 10^8 members is ~800 MB in one task — an OOM
-    the old streaming self-join didn't have. With a threshold set, bucket
-    sizes are counted first and buckets ABOVE it take the old SELF-JOIN
-    path (streams the quadratic output, never holds the member list),
-    while cold buckets keep the cheap grouped expansion — the pair set is
-    IDENTICAL either way (exact hot-split, unlike simhash's recall-trading
-    prefix-split). Cost: one extra histogram aggregation + a checkpoint of
-    the banded rows, which is why it is opt-in: default from
-    ``$SPARK_GRAFT_LSH_HOT_BUCKET`` (unset locally — the bench corpus's
-    largest bucket is ~10 docs; set it to ~100k in production, where the
-    list buffer would reach the hundreds of MB that matter)."""
-    if hot_bucket_threshold is None:
-        import os
-
-        env = os.environ.get("SPARK_GRAFT_LSH_HOT_BUCKET", "").strip()
-        if env:
-            try:
-                hot_bucket_threshold = int(env)
-            except ValueError as ex:
-                raise ValueError(
-                    "SPARK_GRAFT_LSH_HOT_BUCKET must be an integer bucket-"
-                    f"size threshold, got {env!r}"
-                ) from ex
-    banded = sig_df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.slice(F.col("signature"), i * rows + 1, rows),
-            )
-        ).alias("band", "chunk"),
-    ).select(id_col, "band", F.hash("band", "chunk").alias("bucket"))
-    if hot_bucket_threshold is None:
-        cold, hot = banded, None
-    else:
-        # histogram + flag: the banded rows feed two consumers (histogram
-        # and pairing) — pin so the Python signature stage runs once; the
-        # hot bucket-id set is tiny by construction — broadcast
-        banded = banded.localCheckpoint(eager=False)
-        hot_ids = (
-            banded.groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") > hot_bucket_threshold)
-            .select("band", "bucket", F.lit(True).alias("__hot"))
-        )
-        flagged = banded.join(
-            F.broadcast(hot_ids), ["band", "bucket"], "left"
-        ).localCheckpoint(eager=False)
-        cold = flagged.filter(F.col("__hot").isNull()).drop("__hot")
-        hot = flagged.filter(F.col("__hot")).drop("__hot")
-    buckets = (
-        cold.groupBy("band", "bucket")
-        .agg(F.collect_list(F.col(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    pairs = (
-        buckets.select(F.explode("ids").alias("id_a"), "ids")
-        .select("id_a", F.explode("ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    if hot is not None:
-        a = hot.select("band", "bucket", F.col(id_col).alias("id_a"))
-        b = hot.select("band", "bucket", F.col(id_col).alias("id_b"))
-        hot_pairs = a.join(b, ["band", "bucket"]).filter(
-            F.col("id_a") < F.col("id_b")
-        ).select("id_a", "id_b")
-        pairs = pairs.unionByName(hot_pairs)
-    return pairs.distinct()
+    ``hot_bucket_threshold``: see `_bucket_pairs` (exact hot-bucket split;
+    must be positive)."""
+    return _bucket_pairs(
+        banded_buckets(sig_df, id_col, bands, rows),
+        ["band", "bucket"],
+        id_col,
+        "id_a",
+        "id_b",
+        hot_bucket_threshold,
+    ).distinct()
 
 
 def simhash64(text: str) -> int:
@@ -246,65 +359,6 @@ def simhash64(text: str) -> int:
         if acc[i] > 0:
             out |= 1 << i
     return out - (1 << 63)  # signed for bigint storage
-
-
-def _simhash_batch(texts, tok_bits: dict) -> list[int]:
-    """Vectorized SimHash64 for a batch of docs, bit-identical to
-    ``simhash64``; md5 bit-vectors cached per unique token across the whole
-    Arrow batch stream (each unique token is digested once per partition)."""
-    shifts = np.arange(64, dtype=np.uint64)
-    out = []
-    for text in texts:
-        toks = set(text.split())
-        rows = []
-        for tok in toks:
-            bv = tok_bits.get(tok)
-            if bv is None:
-                h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "little")
-                bv = (((np.uint64(h) >> shifts) & np.uint64(1)).astype(np.int8) * 2 - 1)
-                tok_bits[tok] = bv
-            rows.append(bv)
-        if rows:
-            acc = np.sum(np.stack(rows), axis=0, dtype=np.int64)
-        else:
-            acc = np.zeros(64, dtype=np.int64)
-        bits = np.flatnonzero(acc > 0)
-        v = 0
-        for i in bits:
-            v |= 1 << int(i)
-        out.append(v - (1 << 63))
-    return out
-
-
-def add_simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """``df``'s columns minus ``text_col``, plus ``simhash: bigint``.
-
-    r13 optimization round: the simhash used to come back via a JOIN onto
-    the caller's frame — a full shuffle of the corpus with the text column
-    riding both join sides. The Python stage now PASSES THROUGH every
-    non-text column instead (the text is consumed computing the hash and
-    never shipped back out), so there is no join and no exchange at all
-    beyond the widening round-robin. Callers that want text afterwards
-    re-select it from their own frame; none do."""
-    import volga_spark.operators.dedup as _self
-
-    register_by_value(_self)
-    from pyspark.sql import types as T
-
-    # a pre-existing simhash column (dedup outputs carry one) would collide
-    # with the appended one — the fresh hash wins, as with the old join path
-    keep = [f for f in df.schema.fields if f.name not in (text_col, "simhash")]
-    schema = T.StructType(keep + [T.StructField("simhash", T.LongType())])
-    keep_names = [f.name for f in keep]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tok_bits: dict = {}
-        for pdf in batches:
-            out = pdf[keep_names].copy()
-            out["simhash"] = _simhash_batch(pdf[text_col], tok_bits)
-            yield out
-
-    return widen_for_python(df).mapInPandas(gen, schema=schema)
 
 
 def simhash_candidates(
@@ -414,26 +468,14 @@ def simhash_candidates(
         )
     else:
         chunks = chunks.withColumn("chunk2", F.lit(0))
-    # r13 optimization round: the bucket SELF-JOIN (checkpoint + two
-    # exchanges + sort-merge) is now a single groupBy on the bucket key
-    # with the per-bucket member list expanded to ordered pairs in-stage —
-    # identical pair set, ONE exchange of the banded rows, no sort. The
-    # plain path has a single consumer, so the Python simhash stage feeds
-    # straight through with no checkpoint at all (the hot-split branch
-    # pins above, where the histogram adds a second consumer).
+    # the plain path's single consumer lets the Python simhash stage feed
+    # the one bucket exchange directly (the hot split pins above)
     member = (
         F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh"))
         if radius is not None
         else F.struct(F.col(id_col).alias("id"))
     )
-    buckets = (
-        chunks.groupBy("band", "chunk", "chunk2")
-        .agg(F.collect_list(member).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    expanded = buckets.select(F.explode("ms").alias("a"), "ms").select(
-        "a", F.explode("ms").alias("b")
-    ).filter(F.col("a.id") < F.col("b.id"))
+    expanded = _bucket_pairs(chunks, ["band", "chunk", "chunk2"], member, "a", "b")
     if radius is None:
         return expanded.select(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
@@ -650,6 +692,38 @@ def exact_jaccard_pairs(
     )
 
 
+def _positional_gram_hashes(
+    df: DataFrame, text_col: str, id_col: str, n: int, wide_input: bool
+) -> DataFrame:
+    """(id, pos, gh): the xxhash64 of the word n-gram starting at every
+    1-based token position (stride 1) — the gram pass both exact-substring
+    functions share. Docs shorter than ``n`` tokens emit no rows.
+
+    The tokenize/slice/hash explode is JVM-native but CPU-heavy; a small
+    single-row-group scan arrives as ONE partition and would run the whole
+    gram pass on one core — widen first (``wide_input=True`` skips it when
+    the scan is already split, i.e. any real multi-row-group corpus). The
+    token-array SLICE is hashed inside the transform: the explode emits
+    (pos, int64) only — no per-gram string concatenation, and the
+    downstream shuffle never carries gram text (xxhash64 hashes arrays
+    natively, distinguishing token boundaries better than a joined
+    string)."""
+    toks = F.split(F.col(text_col), " ")
+    base = widen_for_python(df.select(id_col, text_col), known_wide=wide_input)
+    return base.select(
+        F.col(id_col),
+        F.posexplode(
+            F.when(
+                F.size(toks) >= n,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+                    lambda i: F.xxhash64(F.slice(toks, i, n)),
+                ),
+            ).otherwise(F.array().cast("array<bigint>"))
+        ).alias("pos0", "gh"),
+    ).select(id_col, (F.col("pos0") + 1).alias("pos"), "gh")
+
+
 def duplicated_ngram_spans(
     df: DataFrame, text_col: str, id_col: str, n: int = 8, wide_input: bool = False
 ) -> DataFrame:
@@ -669,28 +743,7 @@ def duplicated_ngram_spans(
     """
     from pyspark.sql import Window as W
 
-    toks = F.split(F.col(text_col), " ")
-    # the tokenize/slice/hash explode is JVM-native but CPU-heavy; a small
-    # single-row-group scan arrives as ONE partition and would run the whole
-    # gram pass on one core — widen first (wide_input=True skips it when the
-    # scan is already split, i.e. any real multi-row-group corpus)
-    df = widen_for_python(df.select(id_col, text_col), known_wide=wide_input)
-    # hash the token-array SLICE inside the transform: the explode emits
-    # (pos, int64) only — no per-gram string concatenation, and the
-    # downstream shuffle never carries gram text (xxhash64 hashes arrays
-    # natively, distinguishing token boundaries better than a joined string)
-    gh = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.when(
-                F.size(toks) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    lambda i: F.xxhash64(F.slice(toks, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("pos0", "gh"),
-    ).select(id_col, (F.col("pos0") + 1).alias("pos"), "gh")
+    gh = _positional_gram_hashes(df, text_col, id_col, n, wide_input)
     # r13 optimization round (guide §2.4): the duplicated-gram mark used to
     # be groupBy("gh") → count>1 → join back onto the gram rows, and the
     # per-doc position count a THIRD branch (its own aggregate + final
@@ -757,20 +810,7 @@ def remove_duplicated_spans(
     """
     from pyspark.sql import Window as W
 
-    toks = F.split(F.col(text_col), " ")
-    base = widen_for_python(df.select(id_col, text_col), known_wide=wide_input)
-    gh = base.select(
-        F.col(id_col),
-        F.posexplode(
-            F.when(
-                F.size(toks) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    lambda i: F.xxhash64(F.slice(toks, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("pos0", "gh"),
-    ).select(id_col, (F.col("pos0") + 1).alias("pos"), "gh")
+    gh = _positional_gram_hashes(df, text_col, id_col, n, wide_input)
     # non-canonical occurrences of corpus-duplicated grams → cut windows
     occ_rank = W.partitionBy("gh").orderBy(id_col, "pos")
     cuts = (
@@ -1083,14 +1123,8 @@ def winnow_candidate_pairs(
     # fps row with a window over the SAME pruned set instead (one
     # exchange of the fps rows, same bytes the old groupBy shuffled) and
     # carry it through the pairing — the pair aggregate then reads it
-    # with max() (functionally dependent on the id). Identical output
-    # columns and values. The fingerprint SELF-JOIN (two exchanges on fp
-    # + sort-merge) is likewise now one groupBy on fp with the per-
-    # fingerprint (id, n_fp) list expanded to ordered pairs in-stage —
-    # the same candidate multiset, one exchange fewer, no sort; per-
-    # fingerprint memory is bounded by the df cap the skew guard
-    # enforces (max_fp_freq) exactly where it used to bound the join's
-    # per-key blowup.
+    # with max() (functionally dependent on the id). Per-fingerprint
+    # member lists are bounded by the df cap the skew guard enforces.
     if has_carried_n:
         fpsn = fps
     else:
@@ -1099,15 +1133,9 @@ def winnow_candidate_pairs(
         fpsn = fps.withColumn(
             "n_fp", F.count("*").over(W.partitionBy(id_col))
         )
-    groups = fpsn.groupBy("fp").agg(
-        F.collect_list(
-            F.struct(F.col(id_col).alias("id"), F.col("n_fp").alias("n"))
-        ).alias("ms")
-    ).filter(F.size("ms") >= 2)
+    member = F.struct(F.col(id_col).alias("id"), F.col("n_fp").alias("n"))
     pairs = (
-        groups.select(F.explode("ms").alias("a"), "ms")
-        .select("a", F.explode("ms").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
+        _bucket_pairs(fpsn, ["fp"], member, "a", "b")
         .groupBy(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
         )
@@ -1118,116 +1146,6 @@ def winnow_candidate_pairs(
         )
     )
     return pairs, n_pruned
-
-
-def add_winnow_fingerprints(df: DataFrame, text_col: str, id_col: str, k: int = 5, window: int = 8) -> DataFrame:
-    """One row per (doc, fingerprint) — join on fingerprint to find candidate
-    overlapping-document pairs."""
-    import volga_spark.operators.dedup as _self
-
-    register_by_value(_self)
-    schema = f"{id_col} bigint, fp bigint"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                for fp in set(winnow_fingerprints_np(t, k, window)):
-                    ids.append(i)
-                    fps.append(fp)
-            yield pd.DataFrame({id_col: ids, "fp": fps})
-
-    return widen_for_python(df.select(id_col, text_col)).mapInPandas(gen, schema=schema)
-
-
-def add_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 64,
-    n: int = 3,
-    winnow_k: int = 5,
-    winnow_window: int = 8,
-) -> DataFrame:
-    """ALL THREE near-dup signature families in ONE Arrow pass:
-    (id, signature array<bigint> [MinHash-k], simhash bigint,
-    winnow_fps array<bigint>).
-
-    The separate ``add_minhash``/``add_simhash``/``add_winnow_fingerprints``
-    generators each tokenize and re-read the corpus; a multi-method dedup
-    pass (the `q_dedup_approx_pairs` shape — run every detector, union the
-    verdicts) should pay the scan + split + Arrow transfer ONCE. Outputs are
-    bit-identical to the single-method generators (asserted in
-    tests/test_dedup.py), so the candidate stages (`lsh_candidate_pairs`,
-    `simhash_candidates`, `winnow_candidate_pairs`) consume the shared frame
-    unchanged. At 100 TB this turns three full-corpus Python stages into
-    one; callers localCheckpoint the result so the three candidate branches
-    read it instead of recomputing."""
-    import volga_spark.operators.dedup as _self
-
-    register_by_value(_self)
-    a, b = _perm_params(k)
-    schema = (
-        f"{id_col} bigint, signature array<bigint>, simhash bigint, "
-        "winnow_fps array<bigint>"
-    )
-    shifts = np.arange(64, dtype=np.uint64)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tok_h: dict[str, int] = {}
-        tok_bits: dict = {}
-        for pdf in batches:
-            sigs, shs, wfps = [], [], []
-            for t in pdf[text_col]:
-                toks = t.split()
-                # minhash over word n-gram shingles (shared token-hash cache)
-                for tok in toks:
-                    if tok not in tok_h:
-                        tok_h[tok] = _stable_h61(tok)
-                hv = _shingle_hashes(toks, n, tok_h)
-                if hv.size == 0:
-                    sigs.append([MERSENNE] * k)
-                else:
-                    m = (hv[None, :] * a[:, None] + b[:, None]) % MERSENNE
-                    sigs.append(np.min(m, axis=1).tolist())
-                # simhash over the distinct-token bit-vectors
-                rows = []
-                for tok in set(toks):
-                    bv = tok_bits.get(tok)
-                    if bv is None:
-                        h = int.from_bytes(
-                            hashlib.md5(tok.encode()).digest()[:8], "little"
-                        )
-                        bv = (
-                            ((np.uint64(h) >> shifts) & np.uint64(1)).astype(np.int8)
-                            * 2
-                            - 1
-                        )
-                        tok_bits[tok] = bv
-                    rows.append(bv)
-                acc = (
-                    np.sum(np.stack(rows), axis=0, dtype=np.int64)
-                    if rows
-                    else np.zeros(64, dtype=np.int64)
-                )
-                v = 0
-                for i in np.flatnonzero(acc > 0):
-                    v |= 1 << int(i)
-                shs.append(v - (1 << 63))
-                # winnowing fingerprints (char-gram rolling hash)
-                wfps.append(sorted(set(winnow_fingerprints_np(t, winnow_k, winnow_window))))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "signature": sigs,
-                    "simhash": shs,
-                    "winnow_fps": wfps,
-                }
-            )
-
-    return widen_for_python(df.select(id_col, text_col)).mapInPandas(
-        gen, schema=schema
-    )
 
 
 # --- Cross-document paragraph dedup (CCNet, Wenzek et al. 2020 §3.1) --------
@@ -1352,59 +1270,6 @@ FROM survivors GROUP BY {id_col}
 # --- streaming ingest near-dup filter ----------------------------------------
 
 
-def add_minhash_and_grams(
-    df: DataFrame, text_col: str, id_col: str, k: int = 64, n: int = 3
-) -> DataFrame:
-    """(id, signature array<bigint>, grams array<bigint>) in ONE Arrow pass:
-    the MinHash-k signature for LSH banding plus the DISTINCT shingle-hash
-    set for an exact (modulo int-hash collisions) native Jaccard verify —
-    the state row a streaming dedup filter retains per kept document."""
-    import volga_spark.operators.dedup as _self
-
-    register_by_value(_self)
-    a, b = _perm_params(k)
-    schema = f"{id_col} bigint, signature array<bigint>, grams array<bigint>"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tok_h: dict[str, int] = {}
-        for pdf in batches:
-            sigs, grams = [], []
-            for t in pdf[text_col]:
-                toks = t.split()
-                for tok in toks:
-                    if tok not in tok_h:
-                        tok_h[tok] = _stable_h61(tok)
-                hv = _shingle_hashes(toks, n, tok_h)
-                if hv.size == 0:
-                    sigs.append([MERSENNE] * k)
-                    grams.append([])
-                else:
-                    m = (hv[None, :] * a[:, None] + b[:, None]) % MERSENNE
-                    sigs.append(np.min(m, axis=1).tolist())
-                    grams.append(np.unique(hv).tolist())
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "signature": sigs, "grams": grams}
-            )
-
-    return widen_for_python(df.select(id_col, text_col)).mapInPandas(
-        gen, schema=schema
-    )
-
-
-def _band_buckets(sig_df: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
-    """(id, band, bucket) — the lsh_candidate_pairs banding, factored so a
-    streaming filter can band state and batch separately."""
-    return sig_df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.slice(F.col("signature"), i * rows + 1, rows),
-            )
-        ).alias("band", "chunk"),
-    ).select(id_col, "band", F.hash("band", "chunk").alias("bucket"))
-
-
 def _jaccard_ge(threshold: float):
     """Native exact Jaccard over two distinct-gram arrays (no Python)."""
     inter = F.size(F.array_intersect("__ga", "__gb"))
@@ -1420,25 +1285,13 @@ def within_set_verified_pairs(
     broadcast_grams: bool = False,
 ) -> DataFrame:
     """(__a, __b) near-dup pairs WITHIN one document set: banded candidate
-    self-join (same (band, bucket), __a < __b, distinct) verified by the
+    pairs (same (band, bucket), __a < __b, distinct) verified by the
     native gram-set Jaccard >= threshold. THE one within-set candidate
     semantics — the batch curation stage and the streaming ingest filter
     both call this, so candidate/verify behavior cannot drift between the
     declared twins. `grams` must carry (id_col, grams);
     ``broadcast_grams=True`` for micro-batch-sized sets."""
-    # r13 optimization round: same rewrite as lsh_candidate_pairs — the
-    # bucket self-join (checkpoint + two exchanges + sort) becomes one
-    # groupBy on the bucket key with in-stage pair expansion; identical
-    # pair set, single consumer, no pin needed.
-    cand = (
-        banded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.col(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.explode("ids").alias("__a"), "ids")
-        .select("__a", F.explode("ids").alias("__b"))
-        .filter(F.col("__a") < F.col("__b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(banded, ["band", "bucket"], id_col, "__a", "__b").distinct()
     g = grams.select(F.col(id_col).alias("__gid"), "grams")
     ga = g.select(F.col("__gid").alias("__a"), F.col("grams").alias("__ga"))
     gb = g.select(F.col("__gid").alias("__b"), F.col("grams").alias("__gb"))
@@ -1499,17 +1352,19 @@ def neardup_stream_filter(
         if prev_version == epoch_id:
             return
         ss = batch_df.sparkSession
-        new = add_minhash_and_grams(batch_df, text_col, id_col, k, n)
+        new = signatures(
+            batch_df.select(id_col, text_col), text_col, ("minhash", "grams"), k, n
+        )
         # pin the Arrow pass: it feeds banding, verify, and the state write
         new.write.mode("overwrite").parquet(f"{root}/v{epoch_id}/new")
         new = ss.read.parquet(f"{root}/v{epoch_id}/new")
-        new_bands = _band_buckets(new, id_col, bands, rows)
+        new_bands = banded_buckets(new, id_col, bands, rows)
 
         if prev_version is not None:
             state = ss.read.parquet(f"{root}/v{prev_version}/state")
         else:
             state = new.limit(0)
-        state_bands = _band_buckets(state, id_col, bands, rows)
+        state_bands = banded_buckets(state, id_col, bands, rows)
 
         # candidates vs retained history: state side stays in place
         cand_hist = (

@@ -5,8 +5,8 @@ The production crawl-ingestion shape: the historical corpus is represented
 by a banded-MinHash BUCKET INDEX (id, band, bucket — 16 small ints per
 doc, never the text), and each arriving batch is checked against it:
 
-  1. signature the batch (one Arrow pass, `dedup.add_minhash`),
-  2. band the signatures into LSH buckets,
+  1. signature the batch (one Arrow pass, `dedup.signatures`),
+  2. band the signatures into LSH buckets (`dedup.banded_buckets`),
   3. join batch buckets against the index on (band, bucket) with the
      BATCH side broadcast — a micro-batch is thousands of docs vs a
      corpus index of billions of rows, so the index is NEVER shuffled:
@@ -38,24 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from volga_spark.operators.dedup import add_minhash
-
-
-def banded_buckets(
-    sig_df: DataFrame, id_col: str, bands: int = 16, rows: int = 4
-) -> DataFrame:
-    """(id, band, bucket) LSH bucket rows from a `signature` column — the
-    same banding as `dedup.lsh_candidate_pairs` (hash of the band index +
-    the signature slice)."""
-    return sig_df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.slice(F.col("signature"), i * rows + 1, rows),
-            )
-        ).alias("band", "chunk"),
-    ).select(id_col, "band", F.hash("band", "chunk").alias("bucket"))
+from volga_spark.operators.dedup import banded_buckets, signatures
 
 
 class NearDupIndex:
@@ -101,11 +84,15 @@ class NearDupIndex:
 
     def bootstrap(self, df: DataFrame, text_col: str, id_col: str) -> None:
         """Seed the index from an existing (already deduped) corpus."""
-        sig = add_minhash(df, text_col, id_col, k=self.k, n=self.shingle_n)
-        rows = banded_buckets(sig, id_col, self.bands, self.rows).withColumnRenamed(
-            id_col, "id"
-        )
+        rows = self._buckets(df, text_col, id_col).withColumnRenamed(id_col, "id")
         rows.write.mode("append").parquet(self.path)
+
+    def _buckets(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+        sig = signatures(
+            df.select(id_col, text_col), text_col, ("minhash",),
+            k=self.k, n=self.shingle_n,
+        )
+        return banded_buckets(sig, id_col, self.bands, self.rows)
 
     # -- ingest gate --------------------------------------------------------
     def process_batch(
@@ -113,12 +100,9 @@ class NearDupIndex:
     ) -> DataFrame:
         """Gate one batch: returns (id, dup_index, dup_batch, is_dup) and
         appends the kept docs' bucket rows to the index."""
-        sig = add_minhash(batch, text_col, id_col, k=self.k, n=self.shingle_n)
         # the bucket rows feed three consumers (index probe, self-join, the
         # index append) — pin them once; a micro-batch is small by contract
-        buckets = banded_buckets(sig, id_col, self.bands, self.rows).localCheckpoint(
-            eager=True
-        )
+        buckets = self._buckets(batch, text_col, id_col).localCheckpoint(eager=True)
 
         # new-vs-index: broadcast the BATCH buckets; the index scan streams
         idx = self.index_buckets().alias("i")

@@ -672,13 +672,12 @@ def simhash_rank(
     the :func:`int64_rank_expr` rendering of the 64-bit text SimHash that
     :func:`context_order` and ``build_sequences(order="context")`` sort
     by. A pre-existing ``simhash`` column (dedup outputs carry one) is
-    replaced, not duplicated — ``add_simhash`` joins its hashes back onto
-    the input and an ambiguous column would fail analysis."""
-    from volga_spark.operators.dedup import add_simhash
+    replaced, not duplicated."""
+    from volga_spark.operators.dedup import signatures
 
     if "simhash" in df.columns:
         df = df.drop("simhash")
-    d = add_simhash(df, text_col, id_col)
+    d = signatures(df, text_col, ("simhash",))
     return d.withColumn("rank", int64_rank_expr("simhash"))
 
 

@@ -7,11 +7,11 @@ Why not a plain Spark window: Spark's sliding-frame evaluation rebuilds
 the aggregate buffer over the whole frame for every row (no retraction),
 so ``RANGE BETWEEN -(N-1) AND 0`` over the position axis costs O(n·N) —
 measured 4.4s per 200k-row batch at N=10000 vs 0.26s at N=10 (r13,
-profile_rows_serving.py). The reference instead PLANS each virtual point
-against per-bucket row counts (``bucket_span_for_rows_window``,
-src/storage/index/bucket_index.rs:297-327) and loads just enough raw
-buckets. The Spark-first equivalent pre-computes, once per (state, N),
-for each value column:
+profile_rows_serving.py, in git history at fa9af1b). The reference
+instead PLANS each virtual point against per-bucket row counts
+(``bucket_span_for_rows_window``, src/storage/index/bucket_index.rs:297-327)
+and loads just enough raw buckets. The Spark-first equivalent
+pre-computes, once per (state, N), for each value column:
 
   - ``rn``: the (ts, tiebreak) row position per key (the reference's
     ``__seq_no`` cursor order),

@@ -199,7 +199,7 @@ def cover_template_rows(
     the WHOLE cover space is P × 2 entries, enumerable once per service
     instead of re-deriving the granularity-tree walk per request per
     batch (the carry-chain form paid ~1s of per-batch driver analysis at
-    1k requests — profile_serving_floor2.py).
+    1k requests — profile_serving_floor2.py, in git history at fa9af1b).
 
     Returns rows (phase, L, g_i, rel_bucket) where phase = b_first mod P
     and rel_bucket is the level-g_i bucket id of the instance with

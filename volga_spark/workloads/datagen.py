@@ -234,7 +234,7 @@ def q_approx_sketches(spark, sf_dir):
     )
 
     from volga_spark.operators.dedup import (
-        add_signatures,
+        signatures,
         simhash_candidates,
         winnow_candidate_pairs,
     )
@@ -242,9 +242,10 @@ def q_approx_sketches(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     # ONE Arrow pass for both signature families (shared tokenization),
     # checkpointed so the two candidate branches read the cached frame
-    sigs = add_signatures(d, "text", "doc_id", k=64, n=3).localCheckpoint(
-        eager=False
-    )
+    sigs = signatures(
+        d.select("doc_id", "text"), "text", ("minhash", "simhash", "winnow"),
+        k=64, n=3,
+    ).localCheckpoint(eager=False)
     # hamming verify fused into the banding join (radius arg): the
     # quadratic per-bucket candidate set never leaves its stage
     simhash = simhash_candidates(

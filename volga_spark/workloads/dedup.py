@@ -17,6 +17,7 @@ from volga_spark.operators.dedup import (
     all_pairs_jaccard,
     exact_jaccard_pairs,
     lsh_candidate_pairs,
+    signatures,
 )
 from volga_spark.operators.text import fingerprint
 from volga_spark.tables import load_table
@@ -220,9 +221,7 @@ def q_dedup_approx_pairs(spark, sf_dir):
     live in q_approx_sketches' rows-only legs, each still validated against
     independent Python recomputation in tests/test_dedup.py."""
     d = load_table(spark, sf_dir, "documents")
-    from volga_spark.operators.dedup import add_minhash
-
-    sigs = add_minhash(d, "text", "doc_id", k=64, n=3)
+    sigs = signatures(d.select("doc_id", "text"), "text", ("minhash",), k=64, n=3)
     mh_cands = lsh_candidate_pairs(
         sigs.select("doc_id", "signature"), "doc_id", bands=16, rows=4
     )
