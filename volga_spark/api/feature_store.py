@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from volga_spark.operators.asof import asof_join
+from volga_spark.operators.request import request_frame
 
 
 @dataclass
@@ -154,7 +155,9 @@ class OnlineStore:
 
     def get_features(self, spark, points: list[tuple]) -> list[dict]:
         """points = [(request_id, key...)] → list of feature dicts."""
-        req = spark.createDataFrame(points, self.request_columns)
+        if not points:
+            return []
+        req = request_frame(spark, points, self.request_columns)
         return [r.asDict() for r in self.lookup(req).collect()]
 
 

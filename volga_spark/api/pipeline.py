@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from volga_spark.functions import cate_top
 from volga_spark.functions.sliding import SlidingSpec, apply_sliding_aggs
+from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import Frame, range_frame, rows_frame
 
 _WHERE_FNS = ("sum", "avg", "count", "min", "max")
@@ -959,6 +960,8 @@ class PipelineRequestService:
 
     def get_features(self, spark, points: list[tuple]) -> list[dict]:
         """points = [(request_id, key..., ts)] → list of feature dicts."""
+        if not points:
+            return []
         cols = ["request_id", *self.key_cols, self.ts_col]
-        req = spark.createDataFrame(points, cols)
+        req = request_frame(spark, points, cols)
         return self.lookup(req, materialize=True).to_pylist()

@@ -55,6 +55,10 @@ def _self_contained_udfs() -> None:
         pass
 
 
+# SlidingSpec.out_type -> the pandas dtype its sweep column is built with
+_PANDAS_DTYPES = {"double": "float64", "bigint": "Int64"}
+
+
 @dataclass
 class SlidingSpec:
     """One output column: an accumulator factory + its input column names.
@@ -174,6 +178,12 @@ def apply_sliding_aggs(
     spec_data = [(s.name, s.factory, s.inputs, s.finish) for s in specs]
 
     bucketed = bucket_by is not None
+    # pandas dtype per spec column: a part whose values are all None would
+    # otherwise infer object and make pd.concat warn (and, in a future
+    # pandas, change the concatenated dtype)
+    spec_dtypes = {
+        s.name: _PANDAS_DTYPES.get(s.out_type, object) for s in specs
+    }
 
     def sweep_one(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.reset_index(drop=True)
@@ -194,7 +204,7 @@ def apply_sliding_aggs(
             outs = [[v for v, m in zip(vals, emit) if m] for vals in outs]
         res = pdf[passthrough].copy()
         for (name, _, _, _), vals in zip(spec_data, outs):
-            res[name] = vals
+            res[name] = pd.Series(vals, index=res.index, dtype=spec_dtypes[name])
         return res
 
     # mapInPandas over key-sorted partitions instead of per-group
@@ -218,11 +228,14 @@ def apply_sliding_aggs(
             carry = pdf[mask_last]
             done = pdf[~mask_last]
             if len(done):
+                # request mode: groups without requests emit no rows
                 parts = [
-                    sweep_one(g)
+                    part
                     for _, g in done.groupby(keys, sort=False, dropna=False)
+                    if len(part := sweep_one(g))
                 ]
-                yield pd.concat(parts, ignore_index=True)
+                if parts:
+                    yield pd.concat(parts, ignore_index=True)
         if carry is not None and len(carry):
             yield sweep_one(carry)
 

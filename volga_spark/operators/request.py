@@ -193,6 +193,18 @@ def point_in_time_ml_lookup(
         F.lit(1).alias(REQ_FLAG),
         F.col(request_id_col).cast("long"),
     )
+    if requests.isLocal():
+        # a local batch (request_frame) is small and deterministic: keep
+        # only the requested keys' state rows, so the Python sweep never
+        # receives other keys' groups (results are per key, so unchanged).
+        # Left-semi is per distinct key already; <=> keeps NULL-key
+        # requests matched to NULL-key state, as the sweep's groups are.
+        rk = requests.select(*keys)
+        s = s.join(
+            F.broadcast(rk),
+            [s[k].eqNullSafe(rk[k]) for k in keys],
+            "left_semi",
+        )
     combined = s.unionByName(r)
     return apply_sliding_aggs(
         combined,
@@ -204,6 +216,37 @@ def point_in_time_ml_lookup(
         request_col=REQ_FLAG,
         tiebreak=[REQ_FLAG, *ties],
     )
+
+
+def request_frame(spark, points: list[tuple], cols: list[str]) -> DataFrame:
+    """A request batch as a JVM ``LocalRelation`` built from Arrow.
+
+    Same schema and internal values as ``createDataFrame`` over the same
+    list of tuples and column names: the schema comes from the same
+    inference and every row goes through the same ``StructType.toInternal``
+    (naive datetimes read in the process's local zone, aware ones
+    converted), so only the carrier changes. That frame is a pickled
+    Python RDD whose every scan runs a Python-worker task; this one is a
+    leaf the planner scans in the JVM, and ``isLocal()`` holds on it.
+    ``points`` must be non-empty (an empty batch has no schema to infer).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter
+
+    # the steps of SparkSession._createFromLocal, in its order
+    schema = spark._inferSchemaFromList(points, names=list(cols))
+    convert = _create_converter(schema)
+    for i, name in enumerate(cols):
+        schema.fields[i].name = name
+        schema.names[i] = name
+    rows = [schema.toInternal(convert(p)) for p in points]
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def masked(value: str | Column) -> Column:
@@ -282,6 +325,8 @@ class FeatureService:
 
     def get_features(self, spark, points: list[tuple]) -> list[dict]:
         """points = [(request_id, key..., ts)] → list of feature dicts."""
+        if not points:
+            return []
         cols = ["request_id", *self.key_cols, self.ts_col]
-        req = spark.createDataFrame(points, cols)
+        req = request_frame(spark, points, cols)
         return self.lookup(req, materialize=True).to_pylist()

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import RowsFrame
 
 # ops the generic index lookup can answer exactly for ANY column dtype;
@@ -664,8 +665,10 @@ class RowsFeatureService:
         return out.toArrow() if materialize else out
 
     def get_features(self, spark, points: list[tuple]) -> list[dict]:
+        if not points:
+            return []
         cols = ["request_id", *self.key_cols, self.ts_col]
-        req = spark.createDataFrame(points, cols)
+        req = request_frame(spark, points, cols)
         return self.lookup(req, materialize=True).to_pylist()
 
     def close(self) -> None:

@@ -32,6 +32,7 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import RangeFrame, interval_to_micros
 
 
@@ -689,7 +690,9 @@ class TiledFeatureService:
         path — even one shard evaluates the request frame in multiple
         jobs (probe build + final left join), so only an EXPLICIT
         ``shards=1`` (the caller asserting a deterministic request plan)
-        skips it (r13 advisor fix). Online callers know their batch size
+        skips it (r13 advisor fix), as does a local batch (``isLocal()``,
+        the frame ``get_features`` builds) that resolves to one shard:
+        deterministic by construction. Online callers know their batch size
         (``get_features`` passes ``len(points)``); the hint only sizes
         the shard split, so an inexact value affects performance, never
         results.
@@ -715,7 +718,9 @@ class TiledFeatureService:
         auto = shards is None
         if auto and n_requests is not None:
             shards = auto_shards(n_requests, self.probe_rows_per_request())
-        if auto or shards > 1:
+        # a one-shard local batch is deterministic and already a leaf
+        # plan: neither reason for the pin below applies
+        if (auto or shards > 1) and not (shards == 1 and requests.isLocal()):
             # pin the batch via an EAGER localCheckpoint: it materializes
             # the batch ONCE before anything scans it — the determinism
             # guarantee — AND truncates the caller's request plan to a
@@ -791,8 +796,10 @@ class TiledFeatureService:
 
     def get_features(self, spark, points: list[tuple]) -> list[dict]:
         """points = [(request_id, key..., ts)] → list of feature dicts."""
+        if not points:
+            return []
         cols = ["request_id", *self.key_cols, self.ts_col]
-        req = spark.createDataFrame(points, cols)
+        req = request_frame(spark, points, cols)
         # the online caller knows its batch size — skip the count job
         return self.lookup(
             req, n_requests=len(points), materialize=True
