@@ -226,6 +226,9 @@ def main() -> None:
 
     spark = get_spark("volga_spark_bench")
     reg = load_all()
+    missing = [q for q in BENCH_QUERIES if q not in reg]
+    if missing:
+        raise KeyError(f"BENCH_QUERIES not in the workload registry: {missing}")
 
     # warm the JVM + parquet footer caches, the Python UDF workers, and the
     # streaming stack (state-store + offset-log init lands on the first
@@ -253,9 +256,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     total = 0.0
     for name in BENCH_QUERIES:
-        wl = reg.get(name)
-        if wl is None:
-            continue
         # best-of-2: the host is shared, and a transient noisy-neighbor burst
         # during a single trial otherwise lands in the recorded number; the
         # min of two trials is the steady-state cost of the plan

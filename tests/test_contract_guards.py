@@ -47,3 +47,30 @@ def test_bench_final_line_fits_driver_tail():
     assert parsed["metric"] == "headline_queries_total"
     assert set(parsed) == {"metric", "value", "unit", "queries", "sf"}
     assert len(parsed["queries"]) == len(BENCH_QUERIES)
+
+
+def test_bench_queries_are_registered():
+    """bench.py raises on a BENCH_QUERIES name the registry lacks (it used
+    to skip it, silently shrinking the headline total)."""
+    from bench import BENCH_QUERIES
+    from volga_spark.workloads import load_all
+
+    reg = load_all()
+    assert [q for q in BENCH_QUERIES if q not in reg] == []
+
+
+def test_load_all_raises_on_broken_internal_import(tmp_path, monkeypatch):
+    """A registry module whose own volga_spark import fails must fail
+    load_all loudly — swallowing it would drop the module's queries from
+    the oracle run and the bench without a word."""
+    import pytest
+
+    import volga_spark.workloads as wl
+
+    (tmp_path / "vs_broken_registry_mod.py").write_text(
+        "import volga_spark.operators.no_such_module\n"
+    )
+    monkeypatch.syspath_prepend(str(tmp_path))
+    monkeypatch.setattr(wl, "_MODULES", ["vs_broken_registry_mod"])
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        wl.load_all()

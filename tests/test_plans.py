@@ -104,7 +104,7 @@ def test_no_dataframe_rdd_probe():
             # strings/docstrings/comments never tokenize that way. The ban
             # targets the Python DataFrame.rdd PROPERTY — a `.rdd(` METHOD
             # call is JVM-plan introspection (LogicalRDD.rdd() in
-            # _checkpoint_rdd_id, the r12-advisor checkpoint-id capture)
+            # caching.checkpoint_rdd_id, the r12-advisor checkpoint-id capture)
             # and never touches the Python property.
             if (
                 i > 0

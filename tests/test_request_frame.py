@@ -336,3 +336,47 @@ def test_request_plan_is_local_and_prunes_state_to_requested_keys(
     # plan: the whole state is swept
     assert "LeftSemi" not in rdd
     assert any("ExistingRDD" in ln and "request_id" in ln for ln in rdd.splitlines())
+
+
+# -- the pinned rows-index build ---------------------------------------------
+
+
+def test_rows_index_build_reads_state_time_bounds_once(spark, state_df):
+    """``rows_index.pin_rows_index`` reads the state's time bounds in ONE
+    aggregate, shared by the auto bucket granularity and the carry summary
+    (the summary used to run a second min/max over the pinned index): a
+    bucketed ``RowsFeatureService`` build runs 7 jobs (9 before), and a
+    routed pipeline's cold ``get_features`` 19 (21 before). Warm calls are
+    unchanged."""
+    rows, n_build = _jobs_in_group(
+        spark,
+        "rows-build",
+        lambda: RowsFeatureService(
+            state_df.select("user_id", "ts", "seq", "value"),
+            key_cols="user_id",
+            ts_col="ts",
+            value_col="value",
+            frame=rows_frame(5),
+            tiebreak="seq",
+            bucket="auto",
+        ),
+    )
+    try:
+        _, n_rows_warm = _jobs_in_group(
+            spark, "rows-warm", lambda: rows.get_features(spark, POINTS)
+        )
+    finally:
+        rows.close()
+    pipe = _pipeline(spark, state_df)
+    try:
+        assert pipe._index_routed == [False, True]
+        _, n_cold = _jobs_in_group(
+            spark, "pipe-cold", lambda: pipe.get_features(spark, POINTS)
+        )
+        _, n_warm = _jobs_in_group(
+            spark, "pipe-warm", lambda: pipe.get_features(spark, POINTS)
+        )
+    finally:
+        pipe.close()
+    assert (n_build, n_rows_warm) == (7, 8), (n_build, n_rows_warm)
+    assert (n_cold, n_warm) == (19, 11), (n_cold, n_warm)

@@ -106,3 +106,26 @@ def test_text_only_service_rejects_hybrid(spark, sf_dir):
     )
     with pytest.raises(ValueError, match="vector index"):
         svc.search_hybrid(qs)
+
+
+def test_search_server_failure_answers_500(spark):
+    """The search route shares FeatureServer's replies: a service failure
+    answers 500, a malformed query 400 (every exception used to be 400)."""
+
+    class Failing:
+        def search_text(self, queries, k=10):
+            raise RuntimeError("index unavailable")
+
+    def post(port, payload):
+        try:
+            _post(port, payload)
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+        raise AssertionError("expected an HTTP error")
+
+    with SearchServer(spark, Failing()) as srv:
+        assert post(srv.port, {"queries": [{"query_id": 1, "qtext": "x"}]}) == (
+            500,
+            {"error": "index unavailable"},
+        )
+        assert post(srv.port, {"queries": [{"query_id": 1}]})[0] == 400

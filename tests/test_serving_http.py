@@ -213,3 +213,34 @@ def test_http_serves_pipeline_request_service(spark, sf_dir):
         assert got == direct and len(got) == len(points)
     finally:
         svc.close()
+
+
+def test_http_server_failure_answers_500():
+    """A failure that is not the request's fault (a Spark error, a service
+    bug) answers 500 with a JSON error body instead of dropping the
+    connection; a bad request still answers 400."""
+
+    class Failing:
+        key_cols = ["user_id"]
+        ts_col = "ts"
+
+        def get_features(self, spark, points):
+            raise RuntimeError("state store unavailable")
+
+    def post(port, data):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/features", data=data, method="POST"
+        )
+        try:
+            urllib.request.urlopen(req, timeout=60)
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+        raise AssertionError("expected an HTTP error")
+
+    with FeatureServer(None, Failing()) as srv:
+        good = {"requests": [{"request_id": 1, "user_id": 42, "ts": 0}]}
+        assert post(srv.port, json.dumps(good).encode()) == (
+            500,
+            {"error": "state store unavailable"},
+        )
+        assert post(srv.port, b'{"nope": 1}')[0] == 400

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from volga_spark.caching import release_checkpoint_ids
 from volga_spark.functions import cate_top
 from volga_spark.functions.sliding import SlidingSpec, apply_sliding_aggs
 from volga_spark.operators.request import request_frame
@@ -856,9 +857,7 @@ class PipelineRequestService:
         block-decomposed position index, built lazily on first lookup over
         the group's prepared input columns."""
         from volga_spark.operators.rows_index import (
-            _bkt,
-            build_rows_bucket_summary,
-            build_rows_index,
+            pin_rows_index,
             rows_index_lookup,
         )
 
@@ -877,7 +876,9 @@ class PipelineRequestService:
                 s = s.select(
                     *dict.fromkeys([*self.key_cols, self.ts_col, *ties, *cols])
                 )
-                idx = build_rows_index(
+                # bucketed as-of (the reference's bucket-index seek):
+                # pinned dense carry summary — no per-batch state sort
+                idx, summary, ids = pin_rows_index(
                     s,
                     self.key_cols,
                     self.ts_col,
@@ -885,47 +886,10 @@ class PipelineRequestService:
                     frame.preceding,
                     tiebreak=self.tiebreak,
                     sums=False,
+                    bucket="auto",
                 )
-                # resolve the auto bucket granularity and bake __bkt into
-                # the PINNED index, so the per-batch probe scan does no
-                # timestamp arithmetic (same recipe as
-                # RowsFeatureService._build)
-                mm = s.agg(
-                    F.min(
-                        F.expr(f"unix_micros(CAST({self.ts_col} AS TIMESTAMP))")
-                    ).alias("lo"),
-                    F.max(
-                        F.expr(f"unix_micros(CAST({self.ts_col} AS TIMESTAMP))")
-                    ).alias("hi"),
-                ).collect()[0]
-                g = (
-                    max((mm["hi"] - mm["lo"]) // 1024, 1)
-                    if mm["lo"] is not None
-                    else 1
-                )
-                idx = idx.withColumn("__bkt", _bkt(self.ts_col, g))
-                sc = idx.sparkSession.sparkContext
-                idx = idx.coalesce(sc.defaultParallelism).localCheckpoint(
-                    eager=True
-                )
-                from volga_spark.operators.tiles import _checkpoint_rdd_id
-
-                self._index_ckpt_ids.add(_checkpoint_rdd_id(idx))
-                # bucketed as-of (the reference's bucket-index seek):
-                # pinned dense carry summary — no per-batch state sort
-                sm, g, gmax = build_rows_bucket_summary(
-                    idx,
-                    self.key_cols,
-                    self.ts_col,
-                    cols,
-                    bucket_micros=g,
-                    sums=False,
-                )
-                sm = sm.coalesce(sc.defaultParallelism).localCheckpoint(
-                    eager=True
-                )
-                self._index_ckpt_ids.add(_checkpoint_rdd_id(sm))
-                cached = (idx, (sm, g, gmax))
+                self._index_ckpt_ids |= ids
+                cached = (idx, summary)
                 self._rows_indexes[gi] = cached
         idx, summary = cached
         outputs = [
@@ -950,8 +914,6 @@ class PipelineRequestService:
             self.state.unpersist()
             self._cached = False
         if self._index_ckpt_ids:
-            from volga_spark.operators.tiles import release_checkpoint_ids
-
             release_checkpoint_ids(
                 self.state.sparkSession.sparkContext, self._index_ckpt_ids
             )

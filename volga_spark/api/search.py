@@ -32,13 +32,10 @@ POST /search
 
 from __future__ import annotations
 
-import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from volga_spark.api.serving import JsonPostServer
 from volga_spark.operators.retrieval import (
     bm25_index,
     bm25_topk_from_index,
@@ -114,77 +111,34 @@ class SearchService:
         return rrf_fuse([sparse.select("query_id", "rank", "doc_id"), dense], k=k)
 
 
-class SearchServer:
+class SearchServer(JsonPostServer):
     """Serve a SearchService over HTTP on localhost:port (0 = ephemeral) —
     the same stdlib daemon-thread server as api/serving.FeatureServer."""
+
+    route = "/search"
 
     def __init__(self, spark, service: SearchService, port: int = 0):
         self.spark = spark
         self.service = service
-        outer = self
+        super().__init__(port)
 
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_POST(self) -> None:
-                if self.path.rstrip("/") != "/search":
-                    self.send_error(404)
-                    return
-                try:
-                    n = int(self.headers.get("Content-Length", 0))
-                    body = json.loads(self.rfile.read(n) or b"{}")
-                    qs = body["queries"]
-                    k = int(body.get("k", 10))
-                    mode = body.get("mode", "text")
-                    if mode == "hybrid":
-                        qdf = outer.spark.createDataFrame(
-                            [
-                                (int(q["query_id"]), q.get("qtext", ""),
-                                 [float(x) for x in q["qvec"]])
-                                for q in qs
-                            ],
-                            "query_id bigint, qtext string, qvec array<float>",
-                        )
-                        out = outer.service.search_hybrid(qdf, k=k)
-                    else:
-                        qdf = outer.spark.createDataFrame(
-                            [(int(q["query_id"]), q["qtext"]) for q in qs],
-                            "query_id bigint, qtext string",
-                        )
-                        out = outer.service.search_text(qdf, k=k)
-                    rows = [r.asDict() for r in out.collect()]
-                    payload = json.dumps({"results": rows}).encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(payload)))
-                    self.end_headers()
-                    self.wfile.write(payload)
-                except Exception as e:  # noqa: BLE001 — HTTP boundary
-                    msg = json.dumps({"error": str(e)}).encode()
-                    self.send_response(400)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(msg)))
-                    self.end_headers()
-                    self.wfile.write(msg)
-
-        self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
-        self.port = self._server.server_address[1]
-        self._thread: threading.Thread | None = None
-
-    def start(self) -> "SearchServer":
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self) -> "SearchServer":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
+    def handle(self, body: dict) -> dict:
+        qs = body["queries"]
+        k = int(body.get("k", 10))
+        if body.get("mode", "text") == "hybrid":
+            qdf = self.spark.createDataFrame(
+                [
+                    (int(q["query_id"]), q.get("qtext", ""),
+                     [float(x) for x in q["qvec"]])
+                    for q in qs
+                ],
+                "query_id bigint, qtext string, qvec array<float>",
+            )
+            out = self.service.search_hybrid(qdf, k=k)
+        else:
+            qdf = self.spark.createDataFrame(
+                [(int(q["query_id"]), q["qtext"]) for q in qs],
+                "query_id bigint, qtext string",
+            )
+            out = self.service.search_text(qdf, k=k)
+        return {"results": [r.asDict() for r in out.collect()]}

@@ -7,7 +7,8 @@ Spark-first restatement: a stdlib ``http.server`` wrapper over
 ``FeatureService``. Each POST body is one request batch; the handler runs
 the point-in-time lookup DataFrame job and returns the feature rows as
 JSON. No new dependencies; the server runs on a daemon thread so tests and
-notebooks can start/stop it inline.
+notebooks can start/stop it inline. ``JsonPostServer`` is that server core;
+``api/search.SearchServer`` is its other route.
 
 POST /features
   {"requests": [{"request_id": 1, "<key>": ..., "<ts>": "ISO-8601 or epoch-ms"}, ...]}
@@ -23,11 +24,14 @@ client's timeout). Sub-ms single-row serving is out of scope (SURVEY §2.10)
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from volga_spark.operators.request import FeatureService
+
+_log = logging.getLogger(__name__)
 
 
 def _parse_ts(v):
@@ -47,64 +51,54 @@ def _jsonable(v):
     return v
 
 
-class FeatureServer:
-    """Serve a FeatureService over HTTP on localhost:port (0 = ephemeral)."""
+class JsonPostServer:
+    """One JSON-over-POST route on a stdlib ``ThreadingHTTPServer`` bound
+    to localhost:port (0 = ephemeral), served from a daemon thread. A
+    subclass sets ``route`` and implements ``handle(body) -> dict``.
 
-    def __init__(self, spark, service: FeatureService, port: int = 0):
-        self.spark = spark
-        self.service = service
-        outer = self
+    Replies: 200 with ``handle``'s dict; 400 ``{"error": ...}`` for a bad
+    request (``KeyError``, ``ValueError`` — ``JSONDecodeError`` included —
+    and ``TypeError`` raised while parsing or handling it); 500
+    ``{"error": ...}`` for any other failure (a Spark error, a service
+    bug); 404 for any other path."""
+
+    route: str
+
+    def __init__(self, port: int = 0):
+        route, handle = self.route, self.handle
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, *a):  # quiet test runs
                 pass
 
             def do_POST(self) -> None:
-                if self.path.rstrip("/") != "/features":
+                if self.path.rstrip("/") != route:
                     self.send_error(404)
                     return
+                status = 200
                 try:
                     n = int(self.headers.get("Content-Length", 0))
-                    body = json.loads(self.rfile.read(n) or b"{}")
-                    reqs = body["requests"]
-                    # point-in-time services take (keys, ts); latest-value
-                    # services (OnlineStore) declare their own request
-                    # columns without a timestamp
-                    cols = getattr(outer.service, "request_columns", None) or [
-                        "request_id",
-                        *outer.service.key_cols,
-                        outer.service.ts_col,
-                    ]
-                    ts_col = getattr(outer.service, "ts_col", None)
-                    points = [
-                        tuple(
-                            _parse_ts(r[c]) if c == ts_col and c in r else r[c]
-                            for c in cols
-                        )
-                        for r in reqs
-                    ]
-                    rows = outer.service.get_features(outer.spark, points)
-                    payload = json.dumps(
-                        {"features": [{k: _jsonable(v) for k, v in r.items()} for r in rows]}
-                    ).encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(payload)))
-                    self.end_headers()
-                    self.wfile.write(payload)
-                except (KeyError, ValueError, json.JSONDecodeError) as ex:
-                    msg = json.dumps({"error": str(ex)}).encode()
-                    self.send_response(400)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(msg)))
-                    self.end_headers()
-                    self.wfile.write(msg)
+                    payload = handle(json.loads(self.rfile.read(n) or b"{}"))
+                except (KeyError, ValueError, TypeError) as ex:
+                    status, payload = 400, {"error": str(ex)}
+                except Exception as ex:  # noqa: BLE001 — HTTP boundary
+                    _log.exception("POST %s failed", route)
+                    status, payload = 500, {"error": str(ex)}
+                msg = json.dumps(payload, default=str).encode()
+                self.send_response(status)
+                self.send_header("Content-Type", "application/json")
+                self.send_header("Content-Length", str(len(msg)))
+                self.end_headers()
+                self.wfile.write(msg)
 
         self._httpd = ThreadingHTTPServer(("127.0.0.1", port), Handler)
         self.port = self._httpd.server_address[1]
         self._thread: threading.Thread | None = None
 
-    def start(self) -> "FeatureServer":
+    def handle(self, body: dict) -> dict:
+        raise NotImplementedError
+
+    def start(self):
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
         self._thread.start()
         return self
@@ -115,8 +109,36 @@ class FeatureServer:
         if self._thread:
             self._thread.join(timeout=5)
 
-    def __enter__(self) -> "FeatureServer":
+    def __enter__(self):
         return self.start()
 
     def __exit__(self, *exc) -> None:
         self.stop()
+
+
+class FeatureServer(JsonPostServer):
+    """Serve a FeatureService over HTTP on localhost:port (0 = ephemeral)."""
+
+    route = "/features"
+
+    def __init__(self, spark, service: FeatureService, port: int = 0):
+        self.spark = spark
+        self.service = service
+        super().__init__(port)
+
+    def handle(self, body: dict) -> dict:
+        # point-in-time services take (keys, ts); latest-value services
+        # (OnlineStore) declare their own request columns without a
+        # timestamp
+        cols = getattr(self.service, "request_columns", None) or [
+            "request_id",
+            *self.service.key_cols,
+            self.service.ts_col,
+        ]
+        ts_col = getattr(self.service, "ts_col", None)
+        points = [
+            tuple(_parse_ts(r[c]) if c == ts_col and c in r else r[c] for c in cols)
+            for r in body["requests"]
+        ]
+        rows = self.service.get_features(self.spark, points)
+        return {"features": [{k: _jsonable(v) for k, v in r.items()} for r in rows]}

@@ -51,12 +51,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from volga_spark.caching import pin, release_checkpoint_ids
 from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import RowsFrame
 
 # ops the generic index lookup can answer exactly for ANY column dtype;
 # "sum" additionally requires the cents columns (sums=True at build)
 INDEX_OPS = ("count", "sum", "min", "max")
+
+# the auto bucket granularity splits the state's time span into this many
+# buckets (the carry summary is keys × buckets rows)
+TARGET_BUCKETS = 1024
 
 
 def _st_cols(n_cols: int, sums: bool) -> list[str]:
@@ -90,6 +95,18 @@ def _bkt(ts_col: str, bucket_micros: int):
     return fdiv(F.unix_micros(F.col(ts_col).cast("timestamp")), bucket_micros)
 
 
+def _ts_bounds(df: DataFrame, ts_col: str) -> tuple[int | None, int | None]:
+    """(min, max) event time in micros — one 1-row aggregate job; both None
+    for an empty frame."""
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    mm = df.agg(F.min(us).alias("lo"), F.max(us).alias("hi")).collect()[0]
+    return mm["lo"], mm["hi"]
+
+
+def _auto_bucket_micros(lo: int | None, hi: int | None, target_buckets: int) -> int:
+    return max((hi - lo) // target_buckets, 1) if lo is not None else 1
+
+
 def build_rows_bucket_summary(
     index: DataFrame,
     key_cols: str | list[str],
@@ -97,7 +114,7 @@ def build_rows_bucket_summary(
     value_cols: str | list[str],
     bucket_micros: int | None = None,
     sums: bool = True,
-    target_buckets: int = 1024,
+    target_buckets: int = TARGET_BUCKETS,
     max_buckets: int = 1 << 20,
 ) -> tuple[DataFrame, int, int]:
     """Dense per-(key, bucket) carry summary over a rows index — the
@@ -117,26 +134,39 @@ def build_rows_bucket_summary(
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
-    stc = _st_cols(len(cols), sums)
-    mm = index.agg(
-        F.min(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("lo"),
-        F.max(F.unix_micros(F.col(ts_col).cast("timestamp"))).alias("hi"),
-    ).collect()[0]
-    if mm["lo"] is None:  # empty state: any request resolves to p=0
+    lo, hi = _ts_bounds(index, ts_col)
+    if bucket_micros is None:
+        bucket_micros = _auto_bucket_micros(lo, hi, target_buckets)
+    return _bucket_summary(
+        index, keys, ts_col, _st_cols(len(cols), sums), lo, hi,
+        bucket_micros, max_buckets,
+    )
+
+
+def _bucket_summary(
+    index: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    stc: list[str],
+    lo: int | None,
+    hi: int | None,
+    bucket_micros: int,
+    max_buckets: int = 1 << 20,
+) -> tuple[DataFrame, int, int]:
+    """:func:`build_rows_bucket_summary` over known state time bounds."""
+    if lo is None:  # empty state: any request resolves to p=0
         empty = (
             index.limit(0)
             .select(*keys, F.lit(0).cast("long").alias("__bkt"), "__rn", *stc)
         )
-        return empty, bucket_micros or 1, 0
-    span = mm["hi"] - mm["lo"]
-    if bucket_micros is None:
-        bucket_micros = max(span // target_buckets, 1)
+        return empty, bucket_micros, 0
+    span = hi - lo
     if span // bucket_micros + 1 > max_buckets:
         raise ValueError(
             f"rows bucket summary would span {span // bucket_micros + 1} "
             f"buckets (> {max_buckets}); coarsen bucket_micros"
         )
-    gmax = mm["hi"] // bucket_micros  # Python // floors, negative-safe
+    gmax = hi // bucket_micros  # Python // floors, negative-safe
     per = (
         index.withColumn("__bkt", _bkt(ts_col, bucket_micros))
         .groupBy(*keys, "__bkt")
@@ -527,13 +557,49 @@ def rows_lookup(
     )
 
 
+def pin_rows_index(
+    events: DataFrame,
+    key_cols: str | list[str],
+    ts_col: str,
+    value_cols: str | list[str],
+    preceding: int,
+    tiebreak: str | list[str] | None = None,
+    sums: bool = True,
+    bucket: int | str | None = None,
+) -> tuple[DataFrame, tuple[DataFrame, int, int] | None, set[int]]:
+    """Build and pin a serving index: :func:`build_rows_index`, plus — when
+    ``bucket`` is set ("auto", an interval string, or micros) — the bucket
+    id baked into the pinned index (the per-batch in-bucket probe then
+    scans without timestamp arithmetic) and its pinned
+    :func:`build_rows_bucket_summary`. The state's time bounds are read in
+    ONE aggregate over ``events`` and shared by the auto granularity and
+    the summary. Returns ``(index, summary or None, pin rdd ids)``; release
+    the ids with ``caching.release_checkpoint_ids``."""
+    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
+    index = build_rows_index(events, keys, ts_col, cols, preceding, tiebreak, sums)
+    if bucket is None:
+        index, rid = pin(index)
+        return index, None, {rid}
+    lo, hi = _ts_bounds(events, ts_col)
+    g = _bucket_micros(bucket)
+    if g is None:
+        g = _auto_bucket_micros(lo, hi, TARGET_BUCKETS)
+    index, rid = pin(index.withColumn("__bkt", _bkt(ts_col, g)))
+    sm, g, gmax = _bucket_summary(
+        index, keys, ts_col, _st_cols(len(cols), sums), lo, hi, g
+    )
+    sm, sid = pin(sm)
+    return index, (sm, g, gmax), {rid, sid}
+
+
 class RowsFeatureService:
     """Request serving over a pinned ROWS-frame position index — the
     counterpart of :class:`~volga_spark.operators.tiles.TiledFeatureService`
     for ``ROWS N PRECEDING`` lookups (the reference request benchmark's
-    frame). Builds :func:`build_rows_index` once, localCheckpoints it
-    (plan truncation + block-cache pin, the r12 serving-floor recipe), and
-    answers batches through :func:`rows_lookup`. Duck-typed to
+    frame). Builds and pins the index once (:func:`pin_rows_index`: plan
+    truncation + block-cache pin, the r12 serving-floor recipe), and
+    answers batches through :func:`rows_index_lookup`. Duck-typed to
     ``FeatureService`` (lookup / get_features / key_cols / ts_col), so the
     HTTP ``FeatureServer`` serves it unchanged."""
 
@@ -545,7 +611,6 @@ class RowsFeatureService:
         value_col: str,
         frame: RowsFrame,
         tiebreak: str | list[str] | None = None,
-        cache: bool = True,
         bucket: int | str | None = None,
     ):
         if not isinstance(frame, RowsFrame):
@@ -558,67 +623,19 @@ class RowsFeatureService:
         self.value_col = value_col
         self.frame = frame
         self._tiebreak = tiebreak
-        self._cache = cache
         self._bucket = bucket
-        self._ckpt_ids: set[int] = set()
-        self._summary: tuple | None = None
         self._build(events)
 
     def _build(self, events: DataFrame) -> None:
-        self._index = build_rows_index(
+        self._index, self._summary, self._ckpt_ids = pin_rows_index(
             events,
             self.key_cols,
             self.ts_col,
             self.value_col,
             self.frame.preceding,
             self._tiebreak,
+            bucket=self._bucket,
         )
-        g = None
-        if self._bucket is not None:
-            g = _bucket_micros(self._bucket)
-            if g is None:  # auto: size from the state span (1-row agg)
-                mm = events.agg(
-                    F.min(
-                        F.unix_micros(F.col(self.ts_col).cast("timestamp"))
-                    ).alias("lo"),
-                    F.max(
-                        F.unix_micros(F.col(self.ts_col).cast("timestamp"))
-                    ).alias("hi"),
-                ).collect()[0]
-                g = (
-                    max((mm["hi"] - mm["lo"]) // 1024, 1)
-                    if mm["lo"] is not None
-                    else 1
-                )
-            # bake the bucket id into the pinned index: the per-batch
-            # in-bucket probe then scans without timestamp arithmetic
-            self._index = self._index.withColumn(
-                "__bkt", _bkt(self.ts_col, g)
-            )
-        sc = events.sparkSession.sparkContext
-        if self._cache:
-            from volga_spark.operators.tiles import _checkpoint_rdd_id
-
-            self._index = self._index.coalesce(
-                sc.defaultParallelism
-            ).localCheckpoint(eager=True)
-            self._ckpt_ids.add(_checkpoint_rdd_id(self._index))
-        if self._bucket is not None:
-            sm, g, gmax = build_rows_bucket_summary(
-                self._index,
-                self.key_cols,
-                self.ts_col,
-                [self.value_col],
-                bucket_micros=g,
-            )
-            if self._cache:
-                from volga_spark.operators.tiles import _checkpoint_rdd_id
-
-                sm = sm.coalesce(sc.defaultParallelism).localCheckpoint(
-                    eager=True
-                )
-                self._ckpt_ids.add(_checkpoint_rdd_id(sm))
-            self._summary = (sm, g, gmax)
 
     def refresh(self, events: DataFrame) -> None:
         """Swap in a new state snapshot (the streaming write path's latest
@@ -628,15 +645,11 @@ class RowsFeatureService:
         holding LIVE DataFrames from pre-refresh lookups fail loudly
         (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), the engine-wide eager-pin
         contract; ``materialize=True`` results are data and stay valid."""
-        old = set(self._ckpt_ids)
-        self._ckpt_ids = set()
-        self._summary = None
+        old = self._ckpt_ids
         self._build(events)
         self._release(old)
 
     def _release(self, ids: set[int]) -> None:
-        from volga_spark.operators.tiles import release_checkpoint_ids
-
         release_checkpoint_ids(self._index.sparkSession.sparkContext, ids)
 
     def lookup(

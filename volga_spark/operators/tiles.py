@@ -32,6 +32,7 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from volga_spark.caching import checkpoint_rdd_id, pin, release_checkpoint_ids
 from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import RangeFrame, interval_to_micros
 
@@ -436,35 +437,6 @@ def build_serving_state(
     return t.unionByName(r)
 
 
-def _checkpoint_rdd_id(df: DataFrame) -> int:
-    """The persisted RDD id behind an (eager) ``localCheckpoint`` result.
-
-    The checkpoint returns a DataFrame whose ANALYZED plan is a
-    ``LogicalRDD`` wrapping exactly the RDD that was persisted, so the id
-    is read off the plan — no global getPersistentRDDs diff, hence no race
-    with concurrent persists elsewhere on the SparkContext (r13 advisor).
-    JVM-plan introspection only; never touches Python ``DataFrame.rdd``
-    (banned engine-wide — see caching.py)."""
-    return int(df._jdf.queryExecution().analyzed().rdd().id())
-
-
-def release_checkpoint_ids(sc, ids) -> None:
-    """Targeted unpersist of checkpoint blocks by RDD id — never a blanket
-    clear of other callers' persistent RDDs, and never raises (releases run
-    from close()/serving paths). The single shared implementation for every
-    service's pin bookkeeping (tiled, rows, pipeline)."""
-    if not ids:
-        return
-    try:
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist()
-    except Exception:  # noqa: BLE001 — release must never fail
-        pass
-
-
 class TiledFeatureService:
     """Request-serving over TILED state — the reference's "queryable state"
     loop (README feature list + window_request_operator.rs): the streaming
@@ -543,19 +515,13 @@ class TiledFeatureService:
         # with a single broadcast join instead of re-scanning (and
         # re-aggregating, when tiles were derived) the event log twice.
         #
-        # r12 (small-batch floor, measured in profile_serving_floor*.py):
-        # localCheckpoint instead of persist TRUNCATES the state's logical
-        # plan to a LogicalRDD — with plain persist, every per-batch
-        # Dataset creation in tiled_lookup (join/filter/agg/join/select)
-        # re-ANALYZES the full events→ladder-union tree (~1.0s of the
-        # 1k-batch 2.1s floor was driver-side analysis; cache substitution
-        # only happens at execution, after analysis). coalesce to the
-        # scheduler's parallelism first: the 3-level ladder union cached
-        # at ~100 partitions launched ~100 near-empty probe tasks per
-        # batch. Block release in close() is targeted by rdd id captured
-        # across the checkpoint (DataFrame.unpersist cannot release
-        # localCheckpoint blocks, and touching .rdd is banned engine-wide
-        # — see caching.py).
+        # caching.pin's checkpoint also TRUNCATES the state's logical plan
+        # to a LogicalRDD (r12 small-batch floor: with plain persist, every
+        # per-batch Dataset creation in tiled_lookup re-analyzed the full
+        # events→ladder-union tree — ~1.0s of the 1k-batch 2.1s floor), and
+        # its coalesce stops a ~100-partition ladder union from launching
+        # ~100 near-empty probe tasks per batch. close() releases the
+        # blocks by the rdd id the pin returns.
         if self._state is None:
             st = build_serving_state(
                 self.events,
@@ -566,17 +532,8 @@ class TiledFeatureService:
                 self.granularity,
             )
             if self.cache:
-                sc = st.sparkSession.sparkContext
-                st = st.coalesce(sc.defaultParallelism).localCheckpoint(
-                    eager=True
-                )
-                # r13 (advisor): take the checkpoint's rdd id straight off
-                # the returned DataFrame's analyzed plan (a LogicalRDD
-                # wrapping exactly the persisted RDD) — the old
-                # before/after getPersistentRDDs diff could claim a
-                # concurrent persist from ANOTHER service/user on the same
-                # SparkContext and mis-release it at close
-                self._ckpt_rdd_ids = {_checkpoint_rdd_id(st)}
+                st, rid = pin(st)
+                self._ckpt_rdd_ids = {rid}
                 self._cached = True
             self._state = st
         if (
@@ -741,7 +698,7 @@ class TiledFeatureService:
             requests = requests.localCheckpoint(eager=True)
             with self._pins_lock:
                 self._batch_pin_rdd_ids.setdefault(tid, set()).add(
-                    _checkpoint_rdd_id(requests)
+                    checkpoint_rdd_id(requests)
                 )
             if shards is None:
                 n = requests.count()

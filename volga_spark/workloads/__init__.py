@@ -71,10 +71,5 @@ _MODULES = [
 def load_all() -> dict[str, Workload]:
     """Import every workload module (idempotent) and return the registry."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not built yet (incremental rounds) — skip, don't fail.
-            if e.name is None or not e.name.startswith("volga_spark"):
-                raise
+        importlib.import_module(mod)
     return REGISTRY

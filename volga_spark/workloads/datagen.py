@@ -243,8 +243,7 @@ def q_approx_sketches(spark, sf_dir):
     # ONE Arrow pass for both signature families (shared tokenization),
     # checkpointed so the two candidate branches read the cached frame
     sigs = signatures(
-        d.select("doc_id", "text"), "text", ("minhash", "simhash", "winnow"),
-        k=64, n=3,
+        d.select("doc_id", "text"), "text", ("simhash", "winnow")
     ).localCheckpoint(eager=False)
     # hamming verify fused into the banding join (radius arg): the
     # quadratic per-bucket candidate set never leaves its stage
