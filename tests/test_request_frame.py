@@ -4,9 +4,10 @@ Every ``get_features`` front end builds its request batch with
 ``request_frame``: a JVM ``LocalRelation`` with the schema and internal
 values ``spark.createDataFrame(points, cols)`` gives, minus the pickled
 Python RDD. These tests pin that parity for the helper and for all five
-services, the request-mode plan it enables (state semi-joined to the
-requested keys before the Python sweep; no Python scan of the batch), the
-tiled service's skipped batch pin, and the empty-batch contract.
+services, the request-mode plan it enables (state filtered to the
+requested keys before the Python sweep; no Python scan of the batch; every
+frame in one sweep), the tiled service's skipped batch pin, and the
+empty-batch contract.
 """
 
 from __future__ import annotations
@@ -324,30 +325,96 @@ def test_request_plan_is_local_and_prunes_state_to_requested_keys(
     finally:
         svc.close()
     # the request batch is a JVM leaf: no Python RDD scan carries it
-    assert "LocalTableScan [request_id" in local
+    assert "LocalTableScan [" in local
     for ln in local.splitlines():
         if "ExistingRDD" in ln or "LogicalRDD" in ln:
             assert "request_id" not in ln, ln
-    # the sweep's input holds only the requested keys' state rows
+    # the sweep's input holds only the requested keys' state rows: a
+    # literal key filter (no broadcast, no join) below the sweep
     below = _subtree(local, "MapInPandas")
-    semi = [ln for ln in below if "LeftSemi" in ln]
-    assert semi and all("user_id" in ln for ln in semi), "\n".join(below)
+    keyed = [ln for ln in below if "Filter" in ln and "struct(user_id" in ln]
+    assert keyed and all(" IN " in ln or " INSET " in ln for ln in keyed), "\n".join(
+        below
+    )
+    assert not any("Join" in ln for ln in below), "\n".join(below)
     # a non-local batch (a lookup() caller's frame) keeps the unpruned
     # plan: the whole state is swept
-    assert "LeftSemi" not in rdd
+    assert not any(
+        "Filter" in ln and "struct(user_id" in ln
+        for ln in _subtree(rdd, "MapInPandas")
+    )
     assert any("ExistingRDD" in ln and "request_id" in ln for ln in rdd.splitlines())
 
 
+def test_feature_view_service_plan_is_one_sweep(spark, state_df):
+    """A RANGE ML window and a ROWS min/max window: ``get_features`` runs
+    both frames in one virtual-point sweep — one Python pass, one hash
+    exchange on the key, and no per-frame join on request_id."""
+    svc = _pipeline(spark, state_df)
+    try:
+        assert len(svc._groups) == 2 and svc._index_routed == [False, False]
+        plan = _get_features_plan(spark, svc, POINTS)
+    finally:
+        svc.close()
+    final = plan.split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    assert sum("MapInPandas" in ln for ln in lines) == 1, final
+    exchanges = [ln for ln in lines if "Exchange" in ln]
+    assert len(exchanges) == 1, final
+    assert "hashpartitioning(user_id" in exchanges[0], final
+    assert not any("Join" in ln for ln in lines), final
+
+
+def test_feature_view_service_builds_no_rows_index(spark, state_df, monkeypatch):
+    """The ROWS min/max group rides the sweep, so the cold call builds and
+    pins no rows index (no ``localCheckpoint``): the cold call runs 3 jobs
+    and a warm call 2 (the mixed pipeline ran 19 and 11 while its ROWS
+    group was index-routed)."""
+    pipe = _pipeline(spark, state_df)
+    checkpoints = []
+    real = type(state_df).localCheckpoint
+
+    def spy(self, *a, **kw):
+        checkpoints.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(type(state_df), "localCheckpoint", spy)
+    try:
+        _, n_cold = _jobs_in_group(
+            spark, "fv-cold", lambda: pipe.get_features(spark, POINTS)
+        )
+        assert checkpoints == [] and pipe._rows_indexes == {}
+        assert not pipe._index_ckpt_ids
+        _, n_warm = _jobs_in_group(
+            spark, "fv-warm", lambda: pipe.get_features(spark, POINTS)
+        )
+    finally:
+        pipe.close()
+    assert (n_cold, n_warm) == (3, 2), (n_cold, n_warm)
+
+
 # -- the pinned rows-index build ---------------------------------------------
+
+
+ROWS_SQL = """
+SELECT user_id,
+       min(value) OVER wr AS min_r5,
+       max(value) OVER wr AS max_r5,
+       count(*) OVER wr AS n_r5
+FROM st
+WINDOW wr AS (PARTITION BY user_id ORDER BY ts
+              ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)
+"""
 
 
 def test_rows_index_build_reads_state_time_bounds_once(spark, state_df):
     """``rows_index.pin_rows_index`` reads the state's time bounds in ONE
     aggregate, shared by the auto bucket granularity and the carry summary
     (the summary used to run a second min/max over the pinned index): a
-    bucketed ``RowsFeatureService`` build runs 7 jobs (9 before), and a
-    routed pipeline's cold ``get_features`` 19 (21 before). Warm calls are
-    unchanged."""
+    bucketed ``RowsFeatureService`` build runs 7 jobs (9 before). A
+    pipeline whose only frame is ROWS min/max/count still routes to the
+    index: its cold ``get_features`` builds and pins it in 15 jobs, and a
+    warm call runs 8."""
     rows, n_build = _jobs_in_group(
         spark,
         "rows-build",
@@ -367,16 +434,21 @@ def test_rows_index_build_reads_state_time_bounds_once(spark, state_df):
         )
     finally:
         rows.close()
-    pipe = _pipeline(spark, state_df)
+    pipe = PipelineSpec(
+        sql=ROWS_SQL,
+        sources=[SourceSpec("st", dataframe=state_df)],
+        execution_mode="request",
+    ).build_request_service(spark, tiebreak="seq")
     try:
-        assert pipe._index_routed == [False, True]
+        assert pipe._index_routed == [True]
         _, n_cold = _jobs_in_group(
             spark, "pipe-cold", lambda: pipe.get_features(spark, POINTS)
         )
+        assert pipe._rows_indexes and not pipe._cached
         _, n_warm = _jobs_in_group(
             spark, "pipe-warm", lambda: pipe.get_features(spark, POINTS)
         )
     finally:
         pipe.close()
     assert (n_build, n_rows_warm) == (7, 8), (n_build, n_rows_warm)
-    assert (n_cold, n_warm) == (19, 11), (n_cold, n_warm)
+    assert (n_cold, n_warm) == (15, 8), (n_cold, n_warm)

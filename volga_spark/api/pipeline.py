@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from volga_spark.caching import release_checkpoint_ids
 from volga_spark.functions import cate_top
-from volga_spark.functions.sliding import SlidingSpec, apply_sliding_aggs
+from volga_spark.functions.sliding import SlidingSpec, apply_sliding_aggs, quote
 from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import Frame, range_frame, rows_frame
 
@@ -447,9 +447,11 @@ class PipelineSpec:
 
         Scope: every referenced WINDOW must share the same (partition,
         order) — one state table, one point-in-time axis. Multi-WINDOW SQL
-        is served since r12: windows sharing a frame ride one
-        virtual-point sweep, distinct frames become one sweep each, joined
-        on request_id at lookup. ROWS frames are served since r13 — the
+        is served since r12: every distinct frame of a request batch rides
+        ONE virtual-point sweep (one exchange, one Python pass). A service
+        whose frames are all ROWS min/max/count is the exception: it serves
+        from the pinned rows index instead, its frames joined on
+        request_id. ROWS frames are served since r13 — the
         reference's own request benchmark is exactly this shape
         (``ROWS 10000 PRECEDING`` in Request mode,
         window_operator_benchmark.rs:609-612, planned by plan_rows_points,
@@ -590,14 +592,13 @@ class PipelineSpec:
         # multi-WINDOW serving (r12 — the v1 one-window limit ruled out the
         # README's flagship multi-window SQL): every referenced window must
         # be a RANGE frame over the SAME partition/order (one state, one
-        # point-in-time axis); windows sharing a frame length ride one
-        # sweep, distinct lengths become one sweep each, joined on
-        # request_id at lookup.
+        # point-in-time axis); windows sharing a frame length form one
+        # group, and all groups share one virtual-point sweep per lookup.
         keys = order = None
         # group by SEMANTIC frame key (micros / row count), not the Frame
         # dataclass: RANGE '1 hour' and RANGE '60 minutes' are the same
-        # sweep and must merge (r13 review find — the dataclass key split
-        # them into two O(state) sweeps)
+        # frame and must merge (r13 review find — the dataclass key split
+        # them into two frames)
         def _frame_key(f):
             return (
                 (1, f.preceding)
@@ -622,8 +623,8 @@ class PipelineSpec:
         if not table_m:
             raise ValueError("cannot find FROM table")
         state = spark.table(table_m.group(1))
-        # deterministic sweep order: RANGE frames by length, then ROWS by
-        # row count (each distinct frame is one virtual-point sweep)
+        # deterministic group order: RANGE frames by length, then ROWS by
+        # row count
         ordered = sorted(groups)
         first_frame, first_specs = groups[ordered[0]]
         alias_order = [s.name for _, s in per_call]
@@ -767,9 +768,9 @@ class PipelineRequestService:
         self.specs = list(specs) + [
             s for _, group in (extra_groups or []) for s in group
         ]
-        # one sweep per distinct frame length (r12 multi-WINDOW serving);
-        # frame/specs above stay the first group for FeatureService
-        # duck-type compatibility
+        # one (frame, specs) group per distinct frame length (r12
+        # multi-WINDOW serving); frame/specs above stay the first group for
+        # FeatureService duck-type compatibility
         self._groups = [(frame, list(specs))] + [
             (f, list(g)) for f, g in (extra_groups or [])
         ]
@@ -777,15 +778,19 @@ class PipelineRequestService:
         self.prepared = prepared
         self.tiebreak = tiebreak
         self._cached = False
-        # ROWS groups whose calls are all plain min/max/count serve from a
+        # A service whose groups are ALL ROWS min/max/count serves from a
         # block-decomposed position index (operators/rows_index.py) — O(1)
         # per request instead of the O(state)-per-batch Python sweep; the
         # reference's own request bench (ROWS 10000 PRECEDING, MIN/MAX) is
-        # exactly this shape. sum/avg/stddev ROWS groups stay on the sweep
+        # exactly this shape. sum/avg/stddev ROWS groups need the sweep
         # (cents quantization of arbitrary SQL expressions would change
-        # float-sum semantics), as do all ML UDAF families.
+        # float-sum semantics), as do RANGE groups and all ML UDAF
+        # families; once one group needs it, every group rides that one
+        # sweep: it already visits each requested key's sorted state, so a
+        # ROWS ring over the same rows costs a few accumulator calls, far
+        # less than the index's build, pin and per-call as-of jobs.
         self._native_meta = dict(native_meta or {})
-        self._index_routed = [
+        index_only = all(
             isinstance(f, RowsFrame)
             and f.preceding >= 1
             and bool(g)
@@ -795,7 +800,8 @@ class PipelineRequestService:
                 for s in g
             )
             for f, g in self._groups
-        ]
+        )
+        self._index_routed = [index_only] * len(self._groups)
         import threading
 
         self._rows_indexes: dict = {}  # group idx -> (pinned index, summary)
@@ -816,40 +822,37 @@ class PipelineRequestService:
         choice."""
         from volga_spark.operators.request import point_in_time_ml_lookup
 
-        if not all(self._index_routed) and not self._cached:
-            self.state = self.state.persist()
-            self._cached = True
-        outs = []
-        for gi, (frame, specs) in enumerate(self._groups):
-            if self._index_routed[gi]:
-                outs.append(
-                    self._index_lookup(gi, frame, specs, requests, request_id_col)
-                )
-                continue
-            outs.append(
-                point_in_time_ml_lookup(
-                    self.state,
-                    requests,
-                    key_cols=self.key_cols,
-                    ts_col=self.ts_col,
-                    frame=frame,
-                    specs=specs,
-                    prepared=self.prepared,
-                    request_id_col=request_id_col,
-                    tiebreak=self.tiebreak,
-                )
+        if not all(self._index_routed):
+            if not self._cached:
+                self.state = self.state.persist()
+                self._cached = True
+            # every frame in one virtual-point sweep: one exchange, one
+            # Python pass (reference window_request_operator.rs:110-120)
+            out = point_in_time_ml_lookup(
+                self.state,
+                requests,
+                key_cols=self.key_cols,
+                ts_col=self.ts_col,
+                prepared=self.prepared,
+                request_id_col=request_id_col,
+                tiebreak=self.tiebreak,
+                groups=self._groups,
             )
-        base = outs[0]
-        for (_, specs), o in zip(self._groups[1:], outs[1:]):
-            base = base.join(
-                F.broadcast(
-                    o.select(request_id_col, *[s.name for s in specs])
-                ),
-                request_id_col,
-            )
-        out = base.select(
-            request_id_col, *self.key_cols, self.ts_col, *self._alias_order
-        )
+        else:
+            outs = [
+                self._index_lookup(gi, frame, specs, requests, request_id_col)
+                for gi, (frame, specs) in enumerate(self._groups)
+            ]
+            out = outs[0]
+            for (_, specs), o in zip(self._groups[1:], outs[1:]):
+                out = out.join(
+                    F.broadcast(
+                        o.select(request_id_col, *[s.name for s in specs])
+                    ),
+                    request_id_col,
+                )
+        cols = [request_id_col, *self.key_cols, self.ts_col, *self._alias_order]
+        out = out.selectExpr(*map(quote, cols))
         return out.toArrow() if materialize else out
 
     def _index_lookup(self, gi, frame, specs, requests, request_id_col):

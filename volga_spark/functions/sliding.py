@@ -55,6 +55,11 @@ def _self_contained_udfs() -> None:
         pass
 
 
+def quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # SlidingSpec.out_type -> the pandas dtype its sweep column is built with
 _PANDAS_DTYPES = {"double": "float64", "bigint": "Int64"}
 
@@ -80,8 +85,9 @@ def apply_sliding_aggs(
     df: DataFrame,
     partition_by: str | list[str],
     order_by: str,
-    frame: Frame,
-    specs: list[SlidingSpec],
+    frame: Frame | None = None,
+    specs: list[SlidingSpec] | None = None,
+    *,
     passthrough: list[str],
     prepared: dict[str, Column] | None = None,
     tiebreak: str | list[str] | None = None,
@@ -89,12 +95,21 @@ def apply_sliding_aggs(
     assume_partitioned: bool = False,
     request_col: str | None = None,
     n_parts: int | None = None,
+    groups: list[tuple[Frame, list[SlidingSpec]]] | None = None,
 ) -> DataFrame:
     """Compute all ``specs`` over the sliding frame, one row per input row.
 
     ``prepared`` maps extra input column names to Spark expressions (e.g.
     cond booleans, integer-scaled values) evaluated JVM-side first.
     Returns ``passthrough`` columns + one column per spec.
+
+    ``groups``: several ``(frame, specs)`` pairs over the same
+    ``(partition_by, order_by)``, instead of ``frame``/``specs``. They share
+    one repartition, one sort and one Python pass: each key group's columns
+    reach numpy once and every frame sweeps those same arrays (the
+    reference's WindowRequestOperator likewise evaluates all of a window's
+    aggregates in one pass over the shared state). Output columns follow
+    the groups' order.
 
     ``assume_partitioned``: skip the hash repartition when the caller knows
     the input is already hash-partitioned by exactly ``partition_by`` (e.g.
@@ -124,6 +139,13 @@ def apply_sliding_aggs(
     flag so requests sort after state rows at equal ts.
     """
     _self_contained_udfs()
+    if groups is None:
+        if frame is None or specs is None:
+            raise ValueError("apply_sliding_aggs needs frame and specs, or groups")
+        groups = [(frame, specs)]
+    elif frame is not None or specs is not None:
+        raise ValueError("pass either frame/specs or groups, not both")
+    specs = [s for _, g in groups for s in g]
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     ties = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or [])
     work = df
@@ -142,16 +164,19 @@ def apply_sliding_aggs(
 
     input_cols = sorted({c for s in specs for c in s.inputs})
     ts_col = "__ts_micros"
-    work = work.withColumn(ts_col, F.unix_micros(F.col(order_by)))
     extra = [request_col] if request_col is not None else []
-    cols = list(dict.fromkeys(keys + passthrough + ties + input_cols + [ts_col] + extra))
-    work = work.select(*cols)
+    cols = list(dict.fromkeys(keys + passthrough + ties + input_cols + extra))
+    # SQL text: no per-column py4j Column calls (request planning is per call)
+    work = work.selectExpr(
+        *map(quote, cols), f"unix_micros({quote(order_by)}) AS {ts_col}"
+    )
 
     warm_col = "__warm"
     if bucket_by is not None:
-        if not isinstance(frame, RangeFrame):
+        if not all(isinstance(f, RangeFrame) for f, _ in groups):
             raise ValueError("bucket_by requires a RANGE frame")
-        wlen = frame.micros
+        # the longest frame's warm-up covers every shorter one
+        wlen = max(f.micros for f, _ in groups)
         blen = interval_to_micros(bucket_by)
         if blen < wlen:
             raise ValueError("bucket_by must be >= the frame length")
@@ -173,9 +198,16 @@ def apply_sliding_aggs(
     spec_fields = ", ".join(f"`{s.name}` {s.out_type}" for s in specs)
     out_schema = f"{out_fields}, {spec_fields}"
 
-    is_range = isinstance(frame, RangeFrame)
-    length = frame.micros if is_range else frame.preceding
-    spec_data = [(s.name, s.factory, s.inputs, s.finish) for s in specs]
+    # per frame: (is_range, length, [(name, factory, inputs, finish)])
+    sweeps = [
+        (
+            isinstance(f, RangeFrame),
+            f.micros if isinstance(f, RangeFrame) else f.preceding,
+            [(s.name, s.factory, s.inputs, s.finish) for s in g],
+        )
+        for f, g in groups
+    ]
+    array_cols = [ts_col, *input_cols]
 
     bucketed = bucket_by is not None
     # pandas dtype per spec column: a part whose values are all None would
@@ -195,16 +227,23 @@ def apply_sliding_aggs(
             req = (pdf[request_col] == 1).to_numpy()
             add_mask = ~req
             emit = req if emit is None else (emit & req)
-        outs = run_sweep(
-            pdf, ts_col, is_range, length, spec_data,
-            emit_mask=emit, add_mask=add_mask,
-        )
+        cols = {c: pdf[c].to_numpy() for c in array_cols}
+        outs = [
+            vals
+            for is_range, length, spec_data in sweeps
+            for vals in run_sweep_arrays(
+                cols, len(pdf), ts_col, is_range, length, spec_data,
+                emit_mask=emit, add_mask=add_mask,
+            )
+        ]
         if emit is not None:
             pdf = pdf[emit]
             outs = [[v for v, m in zip(vals, emit) if m] for vals in outs]
         res = pdf[passthrough].copy()
-        for (name, _, _, _), vals in zip(spec_data, outs):
-            res[name] = pd.Series(vals, index=res.index, dtype=spec_dtypes[name])
+        for spec, vals in zip(specs, outs):
+            res[spec.name] = pd.Series(
+                vals, index=res.index, dtype=spec_dtypes[spec.name]
+            )
         return res
 
     # mapInPandas over key-sorted partitions instead of per-group
@@ -253,36 +292,6 @@ def apply_sliding_aggs(
     return work.mapInPandas(gen, schema=out_schema)
 
 
-def run_sweep(
-    pdf: pd.DataFrame,
-    ts_col: str,
-    is_range: bool,
-    length: int,
-    spec_data: list[tuple],
-    emit_mask=None,
-    add_mask=None,
-) -> list[list]:
-    """Core two-pointer sweep over an already-sorted frame.
-
-    ``spec_data`` = [(name, factory, input_cols, finish)]. Returns one output
-    list per spec, aligned with ``pdf`` rows. Shared by the batch
-    ``applyInPandas`` path and the streaming stateful handler.
-
-    ``emit_mask`` (bool array aligned with rows): rows with False are swept
-    through the accumulators (they're window context) but their outputs are
-    not materialized — result() formatting dominates sweep cost, so skipping
-    it for warm-up/already-emitted rows matters.
-
-    ``add_mask`` (bool array aligned with rows): rows with False never enter
-    the accumulators (request-mode virtual points — they still anchor a
-    window position and can emit).
-    """
-    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-    return run_sweep_arrays(
-        cols, len(pdf), ts_col, is_range, length, spec_data, emit_mask, add_mask
-    )
-
-
 def run_sweep_arrays(
     cols: dict,
     n: int,
@@ -293,7 +302,22 @@ def run_sweep_arrays(
     emit_mask=None,
     add_mask=None,
 ) -> list[list]:
-    """Array-based sweep core (no pandas) — the streaming handler path."""
+    """Core two-pointer sweep over one key's already-sorted columns.
+
+    ``cols`` maps column names to arrays of ``n`` rows; ``spec_data`` =
+    [(name, factory, input_cols, finish)]. Returns one output list per
+    spec, aligned with the rows. Shared by the batch sweep (once per frame
+    over the same arrays) and the streaming stateful handler.
+
+    ``emit_mask`` (bool array aligned with rows): rows with False are swept
+    through the accumulators (they're window context) but their outputs are
+    not materialized — result() formatting dominates sweep cost, so skipping
+    it for warm-up/already-emitted rows matters.
+
+    ``add_mask`` (bool array aligned with rows): rows with False never enter
+    the accumulators (request-mode virtual points — they still anchor a
+    window position and can emit).
+    """
     ts = cols[ts_col]
     accs = [factory() for _, factory, _, _ in spec_data]
     arg_arrays = [[cols[c] for c in inputs] for _, _, inputs, _ in spec_data]

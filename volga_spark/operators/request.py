@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from volga_spark.functions.sliding import apply_sliding_aggs, quote
 from volga_spark.operators.window import Frame, RowsFrame, event_window
 
 REQ_FLAG = "__is_request"
@@ -144,11 +145,12 @@ def point_in_time_ml_lookup(
     requests: DataFrame,
     key_cols: str | list[str],
     ts_col: str,
-    frame,
-    specs,
+    frame=None,
+    specs=None,
     prepared: dict[str, Column] | None = None,
     request_id_col: str = "request_id",
     tiebreak: str | list[str] | None = None,
+    groups=None,
 ) -> DataFrame:
     """Evaluate the ML UDAF library (cate/top sweep specs) at each request's
     (key, ts) virtual point — the reference's WindowRequestOperator over its
@@ -157,10 +159,11 @@ def point_in_time_ml_lookup(
 
     ``specs`` are the same SlidingSpec values the write-path sweep takes
     (sum_cate, top, top_n_* ...); ``prepared`` expressions are evaluated
-    JVM-side on the STATE rows only (request rows carry NULL inputs and
-    never reach the accumulators). One hash shuffle on the key; requests
-    ride the same exchange as state — identical plan shape to the write
-    path, so serving scales exactly like the window computation itself.
+    JVM-side on the STATE rows only, all over the state's own columns
+    (request rows carry NULL inputs and never reach the accumulators).
+    One hash shuffle on the key; requests ride the same exchange as state
+    — identical plan shape to the write path, so serving scales exactly
+    like the window computation itself.
 
     ROWS frames are served (r13): the sweep gives requests the frame's
     current-row slot and its last ``preceding`` STATE rows (reference
@@ -168,54 +171,91 @@ def point_in_time_ml_lookup(
     tiebreak) so requests land after co-timestamped state rows, matching
     the reference's Cursor(ts, u64::MAX) seek; ``tiebreak`` (state
     columns, e.g. a sequence number) orders co-timestamped state rows.
-    """
-    from volga_spark.functions.sliding import apply_sliding_aggs
 
+    ``groups`` (instead of ``frame``/``specs``): several ``(frame, specs)``
+    pairs answered by ONE sweep — one exchange, one sort, one Python pass
+    for every frame (``apply_sliding_aggs(groups=...)``). Every frame sees
+    the same ``(key, ts, request flag, tiebreak)`` order a single-frame
+    lookup uses, so each column equals that frame's own lookup.
+    """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     ties = [tiebreak] if isinstance(tiebreak, str) else list(tiebreak or [])
+    if groups is None:
+        groups = [(frame, specs)]
 
-    s = state
-    for name, expr in (prepared or {}).items():
-        s = s.withColumn(name, expr)
-    input_cols = sorted({c for spec in specs for c in spec.inputs})
+    # SQL-text projections: Column algebra costs a py4j round trip per
+    # column and operation, and request planning runs on every call
+    s = state.withColumns(prepared) if prepared else state
+    input_cols = sorted({c for _, g in groups for spec in g for c in spec.inputs})
     nulled = list(dict.fromkeys([*ties, *input_cols]))
-    s = s.select(
-        *keys,
-        ts_col,
-        *nulled,
-        F.lit(0).alias(REQ_FLAG),
-        F.lit(None).cast("long").alias(request_id_col),
+    rid = quote(request_id_col)
+    s = s.selectExpr(
+        *map(quote, [*keys, ts_col, *nulled]),
+        f"0 AS {REQ_FLAG}",
+        f"CAST(NULL AS BIGINT) AS {rid}",
     )
-    r = requests.select(
-        *keys,
-        ts_col,
-        *[F.lit(None).cast(dict(s.dtypes)[c]).alias(c) for c in nulled],
-        F.lit(1).alias(REQ_FLAG),
-        F.col(request_id_col).cast("long"),
+    types = dict(s.dtypes)
+    r = requests.selectExpr(
+        *map(quote, [*keys, ts_col]),
+        *[f"CAST(NULL AS {types[c]}) AS {quote(c)}" for c in nulled],
+        f"1 AS {REQ_FLAG}",
+        f"CAST({rid} AS BIGINT) AS {rid}",
     )
     if requests.isLocal():
         # a local batch (request_frame) is small and deterministic: keep
         # only the requested keys' state rows, so the Python sweep never
         # receives other keys' groups (results are per key, so unchanged).
-        # Left-semi is per distinct key already; <=> keeps NULL-key
-        # requests matched to NULL-key state, as the sweep's groups are.
-        rk = requests.select(*keys)
-        s = s.join(
-            F.broadcast(rk),
-            [s[k].eqNullSafe(rk[k]) for k in keys],
-            "left_semi",
-        )
+        # Collecting a bare local relation runs no job, and the keys enter
+        # the plan as a literal IN list (no broadcast).
+        wanted = dict.fromkeys(map(tuple, requests.select(*keys).collect()))
+        cond = _key_filter(keys, types, wanted)
+        if cond is not None:
+            s = s.filter(cond)
     combined = s.unionByName(r)
     return apply_sliding_aggs(
         combined,
         partition_by=keys,
         order_by=ts_col,
-        frame=frame,
-        specs=specs,
+        groups=groups,
         passthrough=[request_id_col, *keys, ts_col],
         request_col=REQ_FLAG,
         tiebreak=[REQ_FLAG, *ties],
     )
+
+
+def _plain_literal(v) -> str | None:
+    """``v`` as SQL text that reads the same under every parser setting,
+    or None (floats, datetimes, strings with quotes or backslashes...)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, str) and "'" not in v and "\\" not in v:
+        return f"'{v}'"
+    return None
+
+
+def _key_filter(keys: list[str], types: dict, wanted) -> str | None:
+    """``struct(keys) IN (named_struct(...), ...)`` over the requested key
+    tuples, typed as the state's key columns. Struct equality in IN/INSET
+    treats NULL fields as equal, so a NULL-key request keeps the NULL-key
+    state rows, as the sweep's groups do. None when some key or value has
+    no plain literal form: the prune is only an optimization, so the
+    lookup then sweeps every key."""
+    if not wanted:
+        return "FALSE"
+    items = []
+    for kv in wanted:
+        fields = []
+        for k, v in zip(keys, kv):
+            lit, name = _plain_literal(v), _plain_literal(k)
+            if lit is None or name is None:
+                return None
+            fields.append(f"{name}, CAST({lit} AS {types[k]})")
+        items.append(f"named_struct({', '.join(fields)})")
+    return f"struct({', '.join(map(quote, keys))}) IN ({', '.join(items)})"
 
 
 def request_frame(spark, points: list[tuple], cols: list[str]) -> DataFrame:
