@@ -17,3 +17,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def local_checkpoints(monkeypatch):
+    """The ``DataFrame.localCheckpoint`` calls made during the test: every
+    pin (``caching.pin``) takes one, so an empty list means nothing was
+    pinned."""
+    from pyspark.sql import DataFrame
+
+    calls = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *a, **kw):
+        calls.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return calls

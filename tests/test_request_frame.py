@@ -352,7 +352,7 @@ def test_feature_view_service_plan_is_one_sweep(spark, state_df):
     exchange on the key, and no per-frame join on request_id."""
     svc = _pipeline(spark, state_df)
     try:
-        assert len(svc._groups) == 2 and svc._index_routed == [False, False]
+        assert len(svc._groups) == 2
         plan = _get_features_plan(spark, svc, POINTS)
     finally:
         svc.close()
@@ -365,35 +365,7 @@ def test_feature_view_service_plan_is_one_sweep(spark, state_df):
     assert not any("Join" in ln for ln in lines), final
 
 
-def test_feature_view_service_builds_no_rows_index(spark, state_df, monkeypatch):
-    """The ROWS min/max group rides the sweep, so the cold call builds and
-    pins no rows index (no ``localCheckpoint``): the cold call runs 3 jobs
-    and a warm call 2 (the mixed pipeline ran 19 and 11 while its ROWS
-    group was index-routed)."""
-    pipe = _pipeline(spark, state_df)
-    checkpoints = []
-    real = type(state_df).localCheckpoint
-
-    def spy(self, *a, **kw):
-        checkpoints.append(a)
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(type(state_df), "localCheckpoint", spy)
-    try:
-        _, n_cold = _jobs_in_group(
-            spark, "fv-cold", lambda: pipe.get_features(spark, POINTS)
-        )
-        assert checkpoints == [] and pipe._rows_indexes == {}
-        assert not pipe._index_ckpt_ids
-        _, n_warm = _jobs_in_group(
-            spark, "fv-warm", lambda: pipe.get_features(spark, POINTS)
-        )
-    finally:
-        pipe.close()
-    assert (n_cold, n_warm) == (3, 2), (n_cold, n_warm)
-
-
-# -- the pinned rows-index build ---------------------------------------------
+# -- job counts: the pipeline sweep and the pinned rows-index build ---------
 
 
 ROWS_SQL = """
@@ -407,14 +379,43 @@ WINDOW wr AS (PARTITION BY user_id ORDER BY ts
 """
 
 
+@pytest.mark.parametrize(
+    "sql", [SQL, ROWS_SQL], ids=["feature_view", "rows_minmax_only"]
+)
+def test_feature_view_service_builds_no_rows_index(
+    spark, state_df, local_checkpoints, request, sql
+):
+    """Every frame rides the sweep, ROWS min/max/count frames included, so
+    the cold call builds and pins no rows index (no ``localCheckpoint``):
+    the cold call runs 3 jobs and a warm call 2. (The mixed pipeline ran
+    19 and 11 while its ROWS group was index-routed, and a ROWS-only
+    min/max/count pipeline 15 and 8 while it served from the index.)"""
+    pipe = PipelineSpec(
+        sql=sql,
+        sources=[SourceSpec("st", dataframe=state_df)],
+        execution_mode="request",
+    ).build_request_service(spark, tiebreak="seq")
+    try:
+        # job groups accumulate: one pair of group ids per case
+        case = request.node.callspec.id
+        _, n_cold = _jobs_in_group(
+            spark, f"cold-{case}", lambda: pipe.get_features(spark, POINTS)
+        )
+        _, n_warm = _jobs_in_group(
+            spark, f"warm-{case}", lambda: pipe.get_features(spark, POINTS)
+        )
+    finally:
+        pipe.close()
+    assert local_checkpoints == []
+    assert (n_cold, n_warm) == (3, 2), (n_cold, n_warm)
+
+
 def test_rows_index_build_reads_state_time_bounds_once(spark, state_df):
     """``rows_index.pin_rows_index`` reads the state's time bounds in ONE
     aggregate, shared by the auto bucket granularity and the carry summary
     (the summary used to run a second min/max over the pinned index): a
-    bucketed ``RowsFeatureService`` build runs 7 jobs (9 before). A
-    pipeline whose only frame is ROWS min/max/count still routes to the
-    index: its cold ``get_features`` builds and pins it in 15 jobs, and a
-    warm call runs 8."""
+    bucketed ``RowsFeatureService`` build runs 7 jobs (9 before), and a
+    warm call 8."""
     rows, n_build = _jobs_in_group(
         spark,
         "rows-build",
@@ -434,21 +435,4 @@ def test_rows_index_build_reads_state_time_bounds_once(spark, state_df):
         )
     finally:
         rows.close()
-    pipe = PipelineSpec(
-        sql=ROWS_SQL,
-        sources=[SourceSpec("st", dataframe=state_df)],
-        execution_mode="request",
-    ).build_request_service(spark, tiebreak="seq")
-    try:
-        assert pipe._index_routed == [True]
-        _, n_cold = _jobs_in_group(
-            spark, "pipe-cold", lambda: pipe.get_features(spark, POINTS)
-        )
-        assert pipe._rows_indexes and not pipe._cached
-        _, n_warm = _jobs_in_group(
-            spark, "pipe-warm", lambda: pipe.get_features(spark, POINTS)
-        )
-    finally:
-        pipe.close()
     assert (n_build, n_rows_warm) == (7, 8), (n_build, n_rows_warm)
-    assert (n_cold, n_warm) == (15, 8), (n_cold, n_warm)

@@ -2,14 +2,14 @@
 
 ``apply_sliding_aggs(groups=...)`` sweeps every ``(frame, specs)`` group of
 one ``(partition, order)`` over the same sorted key groups, and a pipeline
-request service answers a batch with one such sweep for all its frames
-(ROWS min/max/count groups included), unless every frame is ROWS
-min/max/count, in which case the rows index serves it. These tests pin
-that each column of the fused lookup equals its own frame's single-frame
-service (the sweep, or the rows index where that service routes to it)
-row for row, over a corpus with a NULL key, a key with no state, a
-request before a key's first row, a request exactly on a state timestamp
-and co-timestamped state rows ordered by ``tiebreak``.
+request service answers a batch with one such sweep for all its frames,
+whatever their frames and aggregates. These tests pin that each column of
+the fused lookup equals its own frame's single-frame service row for row,
+over a corpus with a NULL key, a key with no state, a request before a
+key's first row, a request exactly on a state timestamp and co-timestamped
+state rows ordered by ``tiebreak``; and that the rows index
+(``RowsFeatureService``, ``rows_lookup``) answers that corpus, NULL-key
+requests included, exactly as the sweep does.
 """
 
 from __future__ import annotations
@@ -21,7 +21,8 @@ import pytest
 from volga_spark.api.pipeline import PipelineSpec, SourceSpec
 from volga_spark.functions.cate_top import sum_cate, top, topn_frequency
 from volga_spark.functions.sliding import apply_sliding_aggs
-from volga_spark.operators.request import point_in_time_ml_lookup, request_frame
+from volga_spark.operators.request import request_frame
+from volga_spark.operators.rows_index import RowsFeatureService, rows_lookup
 from volga_spark.operators.window import range_frame, rows_frame
 
 BASE = datetime(2024, 7, 1, 8, 0, 0)
@@ -106,7 +107,7 @@ SHAPES = {
             [("min(value)", "min_r5"), ("max(value)", "max_r5"), ("count(*)", "n_r5")],
         ),
     ],
-    # a ROWS sum/min group (sweep only) beside an index-eligible ROWS group
+    # a ROWS sum/min group beside a ROWS max/count group
     "rows_sum_min": [
         (
             "r3",
@@ -154,22 +155,12 @@ def _by_id(rows) -> dict:
     return {r["request_id"]: r for r in rows}
 
 
-def _index_eligible(windows) -> bool:
-    """ROWS >= 1 PRECEDING holding only min/max/count calls."""
-    return all(
-        frame.startswith("ROWS") and not frame.startswith("ROWS BETWEEN 0")
-        and all(call.split("(")[0] in ("min", "max", "count") for call, _ in cs)
-        for _, frame, cs in windows
-    )
-
-
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_fused_lookup_equals_each_frame_alone(spark, state_df, shape):
     windows = SHAPES[shape]
     fused = _service(spark, state_df, windows)
     try:
         assert len(fused._groups) == len(windows)
-        assert fused._index_routed == [False] * len(windows)
         got = _by_id(fused.get_features(spark, POINTS))
         # a non-local batch takes the unpruned plan: same rows
         got_rdd = _by_id(
@@ -184,40 +175,12 @@ def test_fused_lookup_equals_each_frame_alone(spark, state_df, shape):
     for window in windows:
         alone = _service(spark, state_df, [window])
         try:
-            routed = _index_eligible([window])
-            assert alone._index_routed == [routed]
             want = _by_id(alone.get_features(spark, POINTS))
-            if routed:
-                assert alone._rows_indexes  # the index really answered
-                # the same frame through the single-frame sweep as well
-                (frame, specs), = alone._groups
-                swept = _by_id(
-                    point_in_time_ml_lookup(
-                        alone.state,
-                        request_frame(spark, POINTS, COLS),
-                        "user_id",
-                        "ts",
-                        frame,
-                        specs,
-                        prepared=alone.prepared,
-                        tiebreak="seq",
-                    )
-                    .toArrow()
-                    .to_pylist()
-                )
         finally:
             alone.close()
         for rid, row in want.items():
             for _, alias in window[2]:
-                if routed and row["user_id"] is None:
-                    # the rows index joins keys with `=`, so a NULL-key
-                    # request reads no state there; the sweep (like the
-                    # write path's PARTITION BY) groups NULL keys together
-                    assert got[rid][alias] == swept[rid][alias], (shape, rid, alias)
-                    continue
                 assert got[rid][alias] == row[alias], (shape, rid, alias)
-                if routed:
-                    assert swept[rid][alias] == row[alias], (shape, rid, alias)
     if shape == "rows_zero":
         # zero stored rows at a virtual point
         assert all(r["n_r0"] == 0 and r["min_r0"] is None for r in got.values())
@@ -227,19 +190,23 @@ def test_fused_lookup_equals_each_frame_alone(spark, state_df, shape):
         assert got[2]["cnt_1h"] > 0 and got[2]["n_r5"] == 5  # NULL key
 
 
-def test_index_only_multi_frame_service_joins_index_lookups(spark, state_df):
-    """Every frame ROWS min/max/count: the rows index serves each frame and
-    the per-frame results join on request_id; no sweep runs."""
+def test_rows_only_multi_frame_service_is_one_sweep(
+    spark, state_df, local_checkpoints
+):
+    """Every frame ROWS min/max/count: the frames still ride the one sweep
+    (no rows index is built or pinned, so no ``localCheckpoint`` runs),
+    each column equals its frame alone, and a NULL-key request reads the
+    NULL-key state."""
     windows = SHAPES["rows_sum_min"][1:] + [
         ("r2", "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW", [("min(value)", "min_r2")])
     ]
     svc = _service(spark, state_df, windows)
     try:
-        assert svc._index_routed == [True, True]
+        assert len(svc._groups) == 2
         got = _by_id(svc.get_features(spark, POINTS))
-        assert len(svc._rows_indexes) == 2 and not svc._cached
     finally:
         svc.close()
+    assert local_checkpoints == []
     for window in windows:
         alone = _service(spark, state_df, [window])
         try:
@@ -249,7 +216,63 @@ def test_index_only_multi_frame_service_joins_index_lookups(spark, state_df):
         for rid, row in want.items():
             for _, alias in window[2]:
                 assert got[rid][alias] == row[alias], (rid, alias)
-    assert got[2]["n_r7"] == 0  # NULL key: the index's `=` key join
+    assert got[2]["n_r7"] == 7  # NULL key: its own state, like PARTITION BY
+
+
+_ROWS5 = [
+    (
+        "wr",
+        "ROWS BETWEEN 5 PRECEDING AND CURRENT ROW",
+        [
+            ("count(value)", "cnt"),
+            ("sum(value)", "sum_value"),
+            ("min(value)", "min_value"),
+            ("max(value)", "max_value"),
+        ],
+    )
+]
+
+
+@pytest.mark.parametrize("bucket", [None, "auto", "1 minute", "1 hour"])
+def test_rows_index_answers_null_keys_like_the_sweep(spark, state_df, bucket):
+    """``RowsFeatureService`` and ``rows_lookup`` join request keys to the
+    index NULL-safe: on this corpus (NULL-key state and requests, a key
+    with no state, co-timestamped rows) both equal the sweep of the same
+    ROWS 5 frame row for row, at every as-of strategy."""
+    svc = _service(spark, state_df, _ROWS5)
+    try:
+        want = _by_id(svc.get_features(spark, POINTS))
+    finally:
+        svc.close()
+    events = state_df.select("user_id", "ts", "seq", "value")
+    rows = RowsFeatureService(
+        events, "user_id", "ts", "value", rows_frame(5), tiebreak="seq",
+        bucket=bucket,
+    )
+    try:
+        served = _by_id(rows.get_features(spark, POINTS))
+    finally:
+        rows.close()
+    looked_up = _by_id(
+        rows_lookup(
+            events,
+            request_frame(spark, POINTS, COLS),
+            "user_id",
+            "ts",
+            "value",
+            rows_frame(5),
+            tiebreak="seq",
+            bucket=bucket,
+        )
+        .toArrow()
+        .to_pylist()
+    )
+    cols = ["user_id", *(alias for _, alias in _ROWS5[0][2])]
+    for got in (served, looked_up):
+        assert sorted(got) == sorted(want)
+        for rid, row in want.items():
+            assert {c: got[rid][c] for c in cols} == {c: row[c] for c in cols}, rid
+    assert want[2]["cnt"] == 5 and want[9]["cnt"] == 5  # NULL-key state
 
 
 def test_write_path_groups_equal_separate_sweeps(spark, state_df):

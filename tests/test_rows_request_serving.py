@@ -322,14 +322,13 @@ def test_rows_feature_service_duck_type(spark, state_df, reqs_df):
         svc.close()
 
 
-def test_sql_rows_minmax_group_routes_through_index(spark, state_df, reqs_df):
-    """r13: a ROWS group whose calls are all plain min/max/count serves
-    from the block-decomposed position index (the O(1)-per-request path —
-    the reference request bench's own shape), while a ROWS group carrying
-    sum/avg stays on the sweep (cents quantization of arbitrary SQL
-    expressions would change float-sum semantics). The routing decision is
-    pinned here; value parity is pinned by the request-mode spec fuzzer
-    and test_request_service_serves_rows_frames."""
+def test_sql_rows_minmax_group_rides_the_sweep(
+    spark, state_df, reqs_df, local_checkpoints
+):
+    """A ROWS group whose calls are all plain min/max/count (the reference
+    request bench's own shape) rides the virtual-point sweep like a ROWS
+    group carrying sum: both match the brute-force oracle, and neither
+    builds or pins a rows index (no ``localCheckpoint``)."""
     from volga_spark.api import PipelineSpec, SourceSpec
 
     def _svc(sql):
@@ -351,9 +350,7 @@ def test_sql_rows_minmax_group_routes_through_index(spark, state_df, reqs_df):
         """
     )
     try:
-        assert eligible._index_routed == [True]
         got = {r["request_id"]: r for r in eligible.lookup(reqs_df).collect()}
-        assert eligible._rows_indexes and eligible._index_ckpt_ids
         want = _oracle(STATE_PDF, REQS_PDF, 9)
         for rid, row in got.items():
             w = want[rid]
@@ -363,7 +360,6 @@ def test_sql_rows_minmax_group_routes_through_index(spark, state_df, reqs_df):
             assert row["n_rows"] == w["cnt"], (rid, row, w)
     finally:
         eligible.close()
-    assert not eligible._index_ckpt_ids and not eligible._rows_indexes
 
     mixed = _svc(
         """
@@ -374,7 +370,6 @@ def test_sql_rows_minmax_group_routes_through_index(spark, state_df, reqs_df):
         """
     )
     try:
-        assert mixed._index_routed == [False]
         got = {r["request_id"]: r for r in mixed.lookup(reqs_df).collect()}
         want = _oracle(STATE_PDF, REQS_PDF, 9)
         for rid, row in got.items():
@@ -384,6 +379,7 @@ def test_sql_rows_minmax_group_routes_through_index(spark, state_df, reqs_df):
                 assert abs(float(row["s"]) - w["sum"]) < 1e-9, (rid, row, w)
     finally:
         mixed.close()
+    assert local_checkpoints == []
 
 
 @pytest.mark.parametrize(

@@ -36,7 +36,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from volga_spark.caching import release_checkpoint_ids
 from volga_spark.functions import cate_top
 from volga_spark.functions.sliding import SlidingSpec, apply_sliding_aggs, quote
 from volga_spark.operators.request import request_frame
@@ -448,10 +447,8 @@ class PipelineSpec:
         Scope: every referenced WINDOW must share the same (partition,
         order) — one state table, one point-in-time axis. Multi-WINDOW SQL
         is served since r12: every distinct frame of a request batch rides
-        ONE virtual-point sweep (one exchange, one Python pass). A service
-        whose frames are all ROWS min/max/count is the exception: it serves
-        from the pinned rows index instead, its frames joined on
-        request_id. ROWS frames are served since r13 — the
+        ONE virtual-point sweep (one exchange, one Python pass), whatever
+        its frames and aggregates. ROWS frames are served since r13 — the
         reference's own request benchmark is exactly this shape
         (``ROWS 10000 PRECEDING`` in Request mode,
         window_operator_benchmark.rs:609-612, planned by plan_rows_points,
@@ -551,7 +548,6 @@ class PipelineSpec:
 
         per_call: list = []  # (window name, spec) in SQL order
         prepared: dict = {}
-        native_meta: dict = {}  # alias -> (op, prepared input col)
         for start, end, fn, argstr, m_over in _find_calls(sql):
             if m_over is None:
                 continue
@@ -575,7 +571,6 @@ class PipelineSpec:
                     col = f"__req_{alias}"
                     prepared[col] = F.expr(args[0]).cast("double")
                     inputs = [col]
-                native_meta[alias] = (fnl, inputs[0])  # rows-index routing
                 per_call.append(
                     (
                         wname,
@@ -625,20 +620,14 @@ class PipelineSpec:
         state = spark.table(table_m.group(1))
         # deterministic group order: RANGE frames by length, then ROWS by
         # row count
-        ordered = sorted(groups)
-        first_frame, first_specs = groups[ordered[0]]
-        alias_order = [s.name for _, s in per_call]
         return PipelineRequestService(
             state,
             keys,
             order,
-            first_frame,
-            first_specs,
+            [tuple(groups[k]) for k in sorted(groups)],
             prepared,
-            extra_groups=[tuple(groups[k]) for k in ordered[1:]],
-            alias_order=alias_order,
+            alias_order=[s.name for _, s in per_call],
             tiebreak=tiebreak,
-            native_meta=native_meta,
         )
 
     def build(self, spark: SparkSession) -> DataFrame:
@@ -751,65 +740,21 @@ class PipelineRequestService:
         state,
         key_cols,
         ts_col,
-        frame,
-        specs,
+        groups,
         prepared,
-        extra_groups=None,
-        alias_order=None,
+        alias_order,
         tiebreak=None,
-        native_meta=None,
     ):
-        from volga_spark.operators.window import RowsFrame
-
         self.state = state
         self.key_cols = list(key_cols)
         self.ts_col = ts_col
-        self.frame = frame
-        self.specs = list(specs) + [
-            s for _, group in (extra_groups or []) for s in group
-        ]
-        # one (frame, specs) group per distinct frame length (r12
-        # multi-WINDOW serving); frame/specs above stay the first group for
-        # FeatureService duck-type compatibility
-        self._groups = [(frame, list(specs))] + [
-            (f, list(g)) for f, g in (extra_groups or [])
-        ]
-        self._alias_order = list(alias_order or [s.name for s in self.specs])
+        # one (frame, specs) group per distinct frame (r12 multi-WINDOW
+        # serving); every group rides the one virtual-point sweep per batch
+        self._groups = [(f, list(g)) for f, g in groups]
+        self._alias_order = list(alias_order)
         self.prepared = prepared
         self.tiebreak = tiebreak
         self._cached = False
-        # A service whose groups are ALL ROWS min/max/count serves from a
-        # block-decomposed position index (operators/rows_index.py) — O(1)
-        # per request instead of the O(state)-per-batch Python sweep; the
-        # reference's own request bench (ROWS 10000 PRECEDING, MIN/MAX) is
-        # exactly this shape. sum/avg/stddev ROWS groups need the sweep
-        # (cents quantization of arbitrary SQL expressions would change
-        # float-sum semantics), as do RANGE groups and all ML UDAF
-        # families; once one group needs it, every group rides that one
-        # sweep: it already visits each requested key's sorted state, so a
-        # ROWS ring over the same rows costs a few accumulator calls, far
-        # less than the index's build, pin and per-call as-of jobs.
-        self._native_meta = dict(native_meta or {})
-        index_only = all(
-            isinstance(f, RowsFrame)
-            and f.preceding >= 1
-            and bool(g)
-            and all(
-                s.name in self._native_meta
-                and self._native_meta[s.name][0] in ("count", "min", "max")
-                for s in g
-            )
-            for f, g in self._groups
-        )
-        self._index_routed = [index_only] * len(self._groups)
-        import threading
-
-        self._rows_indexes: dict = {}  # group idx -> (pinned index, summary)
-        self._index_ckpt_ids: set[int] = set()
-        # serializes the one-time lazy index build: concurrent first
-        # lookups (the HTTP server is threaded) must not build and pin
-        # duplicate indexes (r13 review find)
-        self._index_lock = threading.Lock()
 
     def lookup(
         self,
@@ -822,106 +767,29 @@ class PipelineRequestService:
         choice."""
         from volga_spark.operators.request import point_in_time_ml_lookup
 
-        if not all(self._index_routed):
-            if not self._cached:
-                self.state = self.state.persist()
-                self._cached = True
-            # every frame in one virtual-point sweep: one exchange, one
-            # Python pass (reference window_request_operator.rs:110-120)
-            out = point_in_time_ml_lookup(
-                self.state,
-                requests,
-                key_cols=self.key_cols,
-                ts_col=self.ts_col,
-                prepared=self.prepared,
-                request_id_col=request_id_col,
-                tiebreak=self.tiebreak,
-                groups=self._groups,
-            )
-        else:
-            outs = [
-                self._index_lookup(gi, frame, specs, requests, request_id_col)
-                for gi, (frame, specs) in enumerate(self._groups)
-            ]
-            out = outs[0]
-            for (_, specs), o in zip(self._groups[1:], outs[1:]):
-                out = out.join(
-                    F.broadcast(
-                        o.select(request_id_col, *[s.name for s in specs])
-                    ),
-                    request_id_col,
-                )
+        if not self._cached:
+            self.state = self.state.persist()
+            self._cached = True
+        # every frame in one virtual-point sweep: one exchange, one Python
+        # pass (reference window_request_operator.rs:110-120)
+        out = point_in_time_ml_lookup(
+            self.state,
+            requests,
+            key_cols=self.key_cols,
+            ts_col=self.ts_col,
+            prepared=self.prepared,
+            request_id_col=request_id_col,
+            tiebreak=self.tiebreak,
+            groups=self._groups,
+        )
         cols = [request_id_col, *self.key_cols, self.ts_col, *self._alias_order]
         out = out.selectExpr(*map(quote, cols))
         return out.toArrow() if materialize else out
-
-    def _index_lookup(self, gi, frame, specs, requests, request_id_col):
-        """Serve one min/max/count-only ROWS group from a pinned
-        block-decomposed position index, built lazily on first lookup over
-        the group's prepared input columns."""
-        from volga_spark.operators.rows_index import (
-            pin_rows_index,
-            rows_index_lookup,
-        )
-
-        cols = list(dict.fromkeys(self._native_meta[s.name][1] for s in specs))
-        with self._index_lock:
-            cached = self._rows_indexes.get(gi)
-            if cached is None:
-                s = self.state
-                for name, expr in self.prepared.items():
-                    s = s.withColumn(name, expr)
-                ties = (
-                    [self.tiebreak]
-                    if isinstance(self.tiebreak, str)
-                    else list(self.tiebreak or [])
-                )
-                s = s.select(
-                    *dict.fromkeys([*self.key_cols, self.ts_col, *ties, *cols])
-                )
-                # bucketed as-of (the reference's bucket-index seek):
-                # pinned dense carry summary — no per-batch state sort
-                idx, summary, ids = pin_rows_index(
-                    s,
-                    self.key_cols,
-                    self.ts_col,
-                    cols,
-                    frame.preceding,
-                    tiebreak=self.tiebreak,
-                    sums=False,
-                    bucket="auto",
-                )
-                self._index_ckpt_ids |= ids
-                cached = (idx, summary)
-                self._rows_indexes[gi] = cached
-        idx, summary = cached
-        outputs = [
-            (s_.name, *self._native_meta[s_.name]) for s_ in specs
-        ]
-        return rows_index_lookup(
-            idx,
-            requests,
-            self.key_cols,
-            self.ts_col,
-            cols,
-            frame,
-            outputs,
-            request_id_col=request_id_col,
-            sums=False,
-            include_ts=True,
-            summary=summary,
-        )
 
     def close(self) -> None:
         if self._cached:
             self.state.unpersist()
             self._cached = False
-        if self._index_ckpt_ids:
-            release_checkpoint_ids(
-                self.state.sparkSession.sparkContext, self._index_ckpt_ids
-            )
-            self._index_ckpt_ids = set()
-            self._rows_indexes = {}
 
     def get_features(self, spark, points: list[tuple]) -> list[dict]:
         """points = [(request_id, key..., ts)] → list of feature dicts."""

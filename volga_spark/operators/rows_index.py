@@ -37,12 +37,15 @@ At 100 TB the index build is the same one hash shuffle the write-path
 window does; lookups scale with (index + batch) like the RANGE tile
 path, not with N.
 
-SUM semantics note: the single-column :func:`rows_lookup` API sums via
-the engine-wide cents rule (exact for 2-decimal feature values, the same
-contract as the RANGE tile path). The SQL front end routes only
-min/max/count-shaped ROWS groups here — cumulative-difference float sums
-are NOT the same floating-point object as a per-frame sum, so sum/avg/
-stddev over arbitrary SQL expressions stay on the sweep path.
+SUM semantics note: the index sums via the engine-wide cents rule (exact
+for 2-decimal feature values, the same contract as the RANGE tile path).
+Cumulative-difference float sums are NOT the same floating-point object as
+a per-frame sum, so the SQL front end (``PipelineSpec``'s request mode)
+serves every frame through the virtual-point sweep instead.
+
+Keys join NULL-safe everywhere (``eqNullSafe`` in the probes,
+``partitionBy`` in the build and the union as-of): a NULL-key request reads
+the NULL-key state, like the sweep and the write path's ``PARTITION BY``.
 """
 
 from __future__ import annotations
@@ -55,8 +58,7 @@ from volga_spark.caching import pin, release_checkpoint_ids
 from volga_spark.operators.request import request_frame
 from volga_spark.operators.window import RowsFrame
 
-# ops the generic index lookup can answer exactly for ANY column dtype;
-# "sum" additionally requires the cents columns (sums=True at build)
+# ops the generic index lookup can answer; "sum" reads the cents columns
 INDEX_OPS = ("count", "sum", "min", "max")
 
 # the auto bucket granularity splits the state's time span into this many
@@ -64,16 +66,10 @@ INDEX_OPS = ("count", "sum", "min", "max")
 TARGET_BUCKETS = 1024
 
 
-def _st_cols(n_cols: int, sums: bool) -> list[str]:
+def _st_cols(n_cols: int) -> list[str]:
     """The per-column cumulative/prefix columns a position p's answer needs."""
-    out: list[str] = []
-    for i in range(n_cols):
-        out.append(f"__ccnt{i}")
-        if sums:
-            out.append(f"__csum{i}")
-        out.append(f"__pmin{i}")
-        out.append(f"__pmax{i}")
-    return out
+    parts = ("__ccnt", "__csum", "__pmin", "__pmax")
+    return [f"{c}{i}" for i in range(n_cols) for c in parts]
 
 
 def _bucket_micros(bucket: int | str | None) -> int | None:
@@ -86,6 +82,17 @@ def _bucket_micros(bucket: int | str | None) -> int | None:
 
         return interval_to_micros(bucket)
     return int(bucket)
+
+
+def _null_safe_on(keys: list[str], prefix: str, pos: str, probe_pos: str):
+    """Join condition of an index-side frame (``keys``, ``pos``) with a
+    probe frame carrying ``prefix``-renamed keys and ``probe_pos``: keys
+    compare with ``eqNullSafe``, so NULL keys match each other as they
+    group under ``partitionBy``. Still a hash equi-join for the planner."""
+    cond = F.col(pos) == F.col(probe_pos)
+    for k in keys:
+        cond = cond & F.col(k).eqNullSafe(F.col(f"{prefix}{k}"))
+    return cond
 
 
 def _bkt(ts_col: str, bucket_micros: int):
@@ -113,7 +120,6 @@ def build_rows_bucket_summary(
     ts_col: str,
     value_cols: str | list[str],
     bucket_micros: int | None = None,
-    sums: bool = True,
     target_buckets: int = TARGET_BUCKETS,
     max_buckets: int = 1 << 20,
 ) -> tuple[DataFrame, int, int]:
@@ -138,8 +144,8 @@ def build_rows_bucket_summary(
     if bucket_micros is None:
         bucket_micros = _auto_bucket_micros(lo, hi, target_buckets)
     return _bucket_summary(
-        index, keys, ts_col, _st_cols(len(cols), sums), lo, hi,
-        bucket_micros, max_buckets,
+        index, keys, ts_col, _st_cols(len(cols)), lo, hi, bucket_micros,
+        max_buckets,
     )
 
 
@@ -203,17 +209,12 @@ def build_rows_index(
     value_cols: str | list[str],
     preceding: int,
     tiebreak: str | list[str] | None = None,
-    sums: bool = True,
 ) -> DataFrame:
     """Positioned + block-decomposed state for trailing-``preceding``-row
     lookups over one or more value columns. One hash shuffle on the key;
     three in-partition sorted window passes shared by every column, all
     GROWING frames (O(n)). The block size equals ``preceding`` — the index
     is frame-specific, like the reference's per-window state.
-
-    ``sums=False`` skips the cents columns (min/max/count-only indexes for
-    the SQL front end, where cents quantization of arbitrary expressions
-    would be wrong).
     """
     if preceding < 1:
         raise ValueError("rows index needs preceding >= 1")
@@ -254,10 +255,9 @@ def build_rows_index(
         # other cents path (tiles.py) and the native masked() sum.
         out.append(v.isNotNull().cast("int").alias(f"__nn{i}"))
         out.append(F.count(c).over(grow).alias(f"__ccnt{i}"))
-        if sums:
-            cents = F.round(v * 100).cast("long")
-            out.append(cents.alias(f"__cents{i}"))
-            out.append(F.sum(cents).over(grow).alias(f"__csum{i}"))
+        cents = F.round(v * 100).cast("long")
+        out.append(cents.alias(f"__cents{i}"))
+        out.append(F.sum(cents).over(grow).alias(f"__csum{i}"))
         out.append(F.min(c).over(pref).alias(f"__pmin{i}"))
         out.append(F.max(c).over(pref).alias(f"__pmax{i}"))
         out.append(F.min(c).over(suff).alias(f"__smin{i}"))
@@ -274,8 +274,6 @@ def rows_index_lookup(
     frame: RowsFrame,
     outputs: list[tuple[str, str, str | None]],
     request_id_col: str = "request_id",
-    sums: bool = True,
-    include_ts: bool = False,
     summary: tuple[DataFrame, int, int] | None = None,
 ) -> DataFrame:
     """Generic index probe: each ``(alias, op, column)`` in ``outputs``
@@ -296,8 +294,6 @@ def rows_index_lookup(
     for alias, op, c in outputs:
         if op not in INDEX_OPS:
             raise ValueError(f"rows index cannot answer {op!r} ({alias})")
-        if op == "sum" and not sums:
-            raise ValueError(f"index built without sums cannot answer {alias}")
     try:
         built_n = index.schema["__rn"].metadata.get("rows_index_preceding")
     except Exception:  # noqa: BLE001 — metadata is best-effort (old indexes)
@@ -307,7 +303,7 @@ def rows_index_lookup(
             f"index was built for ROWS {built_n} PRECEDING, lookup asked for "
             f"{n} — the block decomposition is frame-specific; rebuild"
         )
-    st_cols = _st_cols(len(cols), sums)
+    st_cols = _st_cols(len(cols))
 
     if summary is None:
         # --- as-of over the (ts, flag, rn)-sorted union --------------------
@@ -386,12 +382,9 @@ def rows_index_lookup(
             F.col(ts_col).alias("__rts"),
             "__abkt",
         )
-        conds = [ib[k] == prq[f"__rk_{k}"] for k in keys]
-        conds.append(ib["__bkt"] == prq["__abkt"])
-        conds.append(ib[ts_col] <= prq["__rts"])
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
+        cond = _null_safe_on(keys, "__rk_", "__bkt", "__abkt") & (
+            F.col(ts_col) <= F.col("__rts")
+        )
         pa = (
             ib.join(F.broadcast(prq), cond)
             .groupBy(request_id_col)
@@ -404,11 +397,11 @@ def rows_index_lookup(
             F.broadcast(
                 rq.select(
                     request_id_col,
-                    *keys,
-                    (F.col("__abkt") - 1).alias("__bkt"),
+                    *[F.col(k).alias(f"__rk_{k}") for k in keys],
+                    (F.col("__abkt") - 1).alias("__rbkt"),
                 )
             ),
-            keys + ["__bkt"],
+            _null_safe_on(keys, "__rk_", "__bkt", "__rbkt"),
         ).select(
             request_id_col,
             F.col("__rn").alias("__pb"),
@@ -448,15 +441,15 @@ def rows_index_lookup(
     # misses and is recovered with NULL fields by the left join.
     probe = reqp.select(
         request_id_col,
-        *keys,
-        F.greatest(F.col("__p") - n, F.lit(0)).alias("__l1"),
+        *[F.col(k).alias(f"__rk_{k}") for k in keys],
+        (F.greatest(F.col("__p") - n, F.lit(0)) + 1).alias("__l"),
         "__p",
         *[f"{c}_p" for c in st_cols],
-    ).withColumn("__rn", F.col("__l1") + 1)
+    )
     fsel = [
         F.col(request_id_col),
         F.col("__p"),
-        F.col("__rn").alias("__l"),
+        F.col("__l"),
         *[F.col(f"{c}_p") for c in st_cols],
     ]
     for i in range(len(cols)):
@@ -464,14 +457,13 @@ def rows_index_lookup(
         fsel.append(F.col(f"__smax{i}").alias(f"__smax{i}_l"))
         # cum at l-1 = cum at l minus the l-row's own contribution
         fsel.append((F.col(f"__ccnt{i}") - F.col(f"__nn{i}")).alias(f"__cntl1_{i}"))
-        if sums:
-            fsel.append(
-                (
-                    F.col(f"__csum{i}") - F.coalesce(F.col(f"__cents{i}"), F.lit(0))
-                ).alias(f"__csuml1_{i}")
-            )
+        fsel.append(
+            (
+                F.col(f"__csum{i}") - F.coalesce(F.col(f"__cents{i}"), F.lit(0))
+            ).alias(f"__csuml1_{i}")
+        )
     fetched = index.join(
-        F.broadcast(probe.drop("__l1")), keys + ["__rn"]
+        F.broadcast(probe), _null_safe_on(keys, "__rk_", "__rn", "__l")
     ).select(*fsel)
     base_req = requests.select(
         F.col(request_id_col).cast("long"), *keys, ts_col
@@ -503,10 +495,7 @@ def rows_index_lookup(
                 F.greatest(F.col(f"__smax{i}_l"), F.col(f"__pmax{i}_p"))
             )
             exprs.append(F.when(~empty & (cnt > 0), mx).alias(alias))
-    sel = [request_id_col, *keys]
-    if include_ts:
-        sel.append(ts_col)
-    return out.select(*sel, *exprs)
+    return out.select(request_id_col, *keys, *exprs)
 
 
 def rows_lookup(
@@ -564,7 +553,6 @@ def pin_rows_index(
     value_cols: str | list[str],
     preceding: int,
     tiebreak: str | list[str] | None = None,
-    sums: bool = True,
     bucket: int | str | None = None,
 ) -> tuple[DataFrame, tuple[DataFrame, int, int] | None, set[int]]:
     """Build and pin a serving index: :func:`build_rows_index`, plus — when
@@ -577,7 +565,7 @@ def pin_rows_index(
     the ids with ``caching.release_checkpoint_ids``."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
-    index = build_rows_index(events, keys, ts_col, cols, preceding, tiebreak, sums)
+    index = build_rows_index(events, keys, ts_col, cols, preceding, tiebreak)
     if bucket is None:
         index, rid = pin(index)
         return index, None, {rid}
@@ -587,7 +575,7 @@ def pin_rows_index(
         g = _auto_bucket_micros(lo, hi, TARGET_BUCKETS)
     index, rid = pin(index.withColumn("__bkt", _bkt(ts_col, g)))
     sm, g, gmax = _bucket_summary(
-        index, keys, ts_col, _st_cols(len(cols), sums), lo, hi, g
+        index, keys, ts_col, _st_cols(len(cols)), lo, hi, g
     )
     sm, sid = pin(sm)
     return index, (sm, g, gmax), {rid, sid}
