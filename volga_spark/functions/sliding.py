@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from volga_spark._pickle import register_by_value
 from volga_spark.operators.window import Frame, RangeFrame, interval_to_micros
 
 
@@ -38,21 +39,13 @@ def _self_contained_udfs() -> None:
     """Pickle our accumulator/format modules by value so executor Python
     workers don't need volga_spark on their sys.path (the driver may import
     this repo from an arbitrary location)."""
-    try:
-        from pyspark.cloudpickle import register_pickle_by_value
+    import volga_spark.formatting
+    import volga_spark.functions.accumulators
+    import volga_spark.functions.cate_top
+    import volga_spark.functions.sliding
 
-        import volga_spark.formatting
-        import volga_spark.functions.accumulators
-
-        import volga_spark.functions.cate_top
-        import volga_spark.functions.sliding
-
-        register_pickle_by_value(volga_spark.formatting)
-        register_pickle_by_value(volga_spark.functions.accumulators)
-        register_pickle_by_value(volga_spark.functions.cate_top)
-        register_pickle_by_value(volga_spark.functions.sliding)
-    except Exception:  # best effort — PYTHONPATH-propagated setups still work
-        pass
+    register_by_value(volga_spark.formatting, volga_spark.functions.accumulators,
+                      volga_spark.functions.cate_top, volga_spark.functions.sliding)
 
 
 def quote(name: str) -> str:

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from volga_spark._pickle import register_by_value
 from volga_spark.functions.sliding import (
     SlidingSpec,
     _self_contained_udfs,
@@ -72,16 +73,10 @@ def sliding_window_stream(
     one column per spec. Output mode: append.
     """
     _self_contained_udfs()
+    import volga_spark.functions.sliding as _sl
     import volga_spark.streaming.stateful_window as _self
-    try:
-        from pyspark.cloudpickle import register_pickle_by_value
 
-        register_pickle_by_value(_self)
-        import volga_spark.functions.sliding as _sl
-
-        register_pickle_by_value(_sl)
-    except Exception:
-        pass
+    register_by_value(_self, _sl)
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 

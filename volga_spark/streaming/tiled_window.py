@@ -67,6 +67,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from volga_spark._pickle import register_by_value
+
 # module-scope so cloudpickle's register_pickle_by_value captures the class
 # itself into the handler closure (executors don't have the repo on sys.path)
 from volga_spark.formatting import format_float, join_csv, scalar_to_string
@@ -1659,19 +1661,11 @@ def tiled_sliding_window_stream(
     if not isinstance(frame, RangeFrame):
         raise ValueError("tiled windows are time-bucketed; use a RANGE frame "
                          "(the untiled handler covers ROWS frames)")
+    import volga_spark.formatting as _fmt
+    import volga_spark.functions.accumulators as _acc
     import volga_spark.streaming.tiled_window as _self
 
-    try:
-        from pyspark.cloudpickle import register_pickle_by_value
-
-        import volga_spark.formatting as _fmt
-        import volga_spark.functions.accumulators as _acc
-
-        register_pickle_by_value(_self)
-        register_pickle_by_value(_acc)
-        register_pickle_by_value(_fmt)
-    except Exception:
-        pass
+    register_by_value(_self, _acc, _fmt)
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
