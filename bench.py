@@ -218,12 +218,10 @@ def _cleanup(spark) -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    from volga_spark.session import get_spark
+    from volga_spark.session import DEFAULT_SF_DIR as sf_dir, get_spark
     from volga_spark.workloads import load_all
 
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark("volga_spark_bench")
     reg = load_all()
     missing = [q for q in BENCH_QUERIES if q not in reg]

@@ -195,10 +195,9 @@ def main() -> None:
     import __spark_entry__ as entry
     from bench import materialize, _cleanup  # same timing discipline
 
-    from volga_spark.session import get_spark
+    from volga_spark.session import DEFAULT_SF_DIR as src, get_spark
 
     spark = get_spark()
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     dst = f"/tmp/scaleprobe/x{factor}"
     if not os.path.exists(f"{dst}/documents.parquet"):
         t0 = time.perf_counter()

@@ -6,6 +6,7 @@ import random
 
 import pytest
 
+from volga_spark.operators import components
 from volga_spark.operators.components import connected_components
 
 
@@ -80,7 +81,7 @@ def test_empty_edges(spark):
 def test_distributed_path_still_converges(spark, monkeypatch):
     # force the star-contraction rounds even for a tiny graph (r13: small
     # edge sets take the bounded local union-find fast path by default)
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
+    monkeypatch.setattr(components, "LOCAL_MAX_EDGES", 0)
     edges = [(i, i + 1) for i in range(60)]
     _check(spark, 61, edges)
 
@@ -91,6 +92,18 @@ def test_local_and_distributed_paths_agree(spark, monkeypatch):
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(220)]
     edges = [(a, b) for a, b in edges if a != b]
     local = _spark_cc(spark, edges)
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
+    monkeypatch.setattr(components, "LOCAL_MAX_EDGES", 0)
     dist = _spark_cc(spark, edges)
     assert local == dist
+
+
+def test_local_path_result_is_a_jvm_local_relation(spark):
+    # built from an Arrow-converted pandas frame, not a list of rows: a
+    # pickled Python RDD would run every scan of the result as Python tasks
+    # in a second worker pool
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src bigint, dst bigint")
+    out = connected_components(df, "src", "dst")
+    assert out.isLocal()
+    assert {(r.node, r.component) for r in out.collect()} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    }

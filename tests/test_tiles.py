@@ -163,7 +163,6 @@ def test_lookup_never_shuffles_state(spark, sf_dir):
         value_col="value",
         frame=range_frame("1 hour"),
         granularity="1 minute",
-        cache=True,
     )
     pts = [
         (i, int(r["user_id"]), r["ts"])
@@ -295,9 +294,9 @@ def test_ladder_lookup_equals_naive_and_flat(spark, sf_dir, window):
         value_col="value",
         frame=range_frame(n),
         granularities=ladder,
-        cache=False,
     )
     got = svc.lookup(requests).toPandas().set_index("request_id").sort_index()
+    svc.close()
     flat = (
         tiled_lookup(
             evs,
@@ -331,7 +330,7 @@ def test_auto_service_builds_ladder_for_long_windows(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     svc = auto_feature_service(
         ev, "user_id", "ts", "value", range_frame("7 days"),
-        granularity="1 minute", threshold=0.0, cache=False,
+        granularity="1 minute", threshold=0.0,
     )
     assert svc.chosen == "tiled"
     assert svc.granularities is not None and len(svc.granularities) >= 2
@@ -342,6 +341,7 @@ def test_auto_service_builds_ladder_for_long_windows(spark, sf_dir):
         .select(F.col("event_id").alias("request_id"), "user_id", "ts")
     )
     got = svc.lookup(requests).toPandas().set_index("request_id").sort_index()
+    svc.close()
     naive = (
         _naive_window(spark, sf_dir, requests, "7 DAYS")
         .toPandas()
@@ -353,21 +353,23 @@ def test_auto_service_builds_ladder_for_long_windows(spark, sf_dir):
     # a short window keeps the flat level
     short = auto_feature_service(
         ev, "user_id", "ts", "value", range_frame("1 hour"),
-        granularity="1 minute", threshold=0.0, cache=False,
+        granularity="1 minute", threshold=0.0,
     )
     assert short.chosen == "tiled" and short.granularities is None
+    short.close()
     # sub-minute base granularity: ladder levels render in µs, so a x60
     # step below one minute stays a valid non-zero granularity (was a
     # '0 minutes' level -> ZeroDivisionError in the divisibility check)
     sub = auto_feature_service(
         ev, "user_id", "ts", "value", range_frame("1 hour"),
-        granularity="500 milliseconds", threshold=0.0, cache=False,
+        granularity="500 milliseconds", threshold=0.0,
     )
     assert sub.chosen == "tiled"
     assert sub.granularities == ["500 milliseconds", "30000000 microseconds"]
     sub_got = (
         sub.lookup(requests.limit(5)).toPandas().set_index("request_id").sort_index()
     )
+    sub.close()
     for col in ("cnt", "min_value", "max_value"):
         pd.testing.assert_series_equal(
             sub_got[col],
@@ -406,7 +408,6 @@ def test_stream_maintained_tiles_serve_through_ladder(spark, sf_dir):
         value_col="value",
         frame=range_frame("7 days"),
         granularities=ladder,
-        cache=False,
     )
     requests = (
         load_table(spark, sf_dir, "events")
@@ -415,6 +416,7 @@ def test_stream_maintained_tiles_serve_through_ladder(spark, sf_dir):
         .select(F.col("event_id").alias("request_id"), "user_id", "ts")
     )
     got = svc.lookup(requests).toPandas().set_index("request_id").sort_index()
+    svc.close()
     naive = (
         _naive_window(spark, sf_dir, requests, "7 DAYS")
         .toPandas()

@@ -112,8 +112,8 @@ class OnlineStore:
     event time, exactly-once via the epoch-retry-idempotent upsert sink).
     ``lookup`` broadcast-joins a batch of entity keys against it — the
     serving-path shape of `operators/request.FeatureService`, here for
-    plain latest-value features. `cache=True` pins the state in the block
-    cache after the first lookup (call ``close()`` to release).
+    plain latest-value features. The first lookup pins the state in the
+    block cache (call ``close()`` to release).
     """
 
     view_name: str
@@ -121,11 +121,10 @@ class OnlineStore:
     ts_col: str
     features: list[str]
     state: DataFrame
-    cache: bool = True
     _cached: bool = False
 
     def lookup(self, entities: DataFrame) -> DataFrame:
-        if self.cache and not self._cached:
+        if not self._cached:
             self.state = self.state.persist()
             self._cached = True
         # left join keeps every requested entity (missing keys → NULLs);

@@ -21,17 +21,26 @@ survive executor loss across rounds.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# deduped edge sets up to this size (~3 MB of edges, far under the session's
+# 64 MB broadcast threshold) resolve by driver-side union-find; larger ones
+# run the distributed star rounds
+LOCAL_MAX_EDGES = 200_000
 
 
 def _local_union_find(spark, e: DataFrame) -> DataFrame:
     """Exact connected components of a small (driver-resident) edge set via
     union-find with path compression + union-by-min-label. Returns the same
     (node, component=min node id) set the distributed star rounds produce.
-    Only reachable under the documented ``SPARK_GRAFT_CC_LOCAL_MAX`` bound."""
+    Only reachable under the ``LOCAL_MAX_EDGES`` bound.
+
+    The result is built from a pandas frame so the Arrow-enabled session
+    makes it a JVM-local relation: a list of rows would become a pickled
+    Python RDD, and every scan of it would run Python tasks in a second
+    worker pool."""
+    import pandas as pd
     from pyspark.sql import types as T
 
     node_type = e.schema["src"].dataType
@@ -63,8 +72,9 @@ def _local_union_find(spark, e: DataFrame) -> DataFrame:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, out_schema)
+    nodes = list(parent)
+    out = pd.DataFrame({"node": nodes, "component": [find(n) for n in nodes]})
+    return spark.createDataFrame(out, out_schema)
 
 
 def _large_star(edges: DataFrame, w: int) -> DataFrame:
@@ -153,16 +163,13 @@ def connected_components(
     # few-hundred-edge graph (the common near-dup case after banding)
     # spends seconds of pure overhead on data that fits in one task. When
     # the deduped edge set is small enough to hold on the driver
-    # (bounded, default 200k edges ≈ 3 MB — far under the session's 64 MB
-    # broadcast threshold), run exact union-find locally instead of
+    # (``LOCAL_MAX_EDGES``), run exact union-find locally instead of
     # O(log n) distributed rounds; the distributed loop is unchanged for
     # everything larger. The count below replaces round 1's materializing
     # action, so the distributed path pays one extra cheap job at most.
     # Result sets are identical (pinned by
     # tests/test_components.py::test_local_and_distributed_paths_agree).
-    local_max = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "200000"))
-    n_edges = e.count()
-    if n_edges <= local_max:
+    if e.count() <= LOCAL_MAX_EDGES:
         return _local_union_find(spark, e)
     prev_sig = None
     for _ in range(max_rounds):

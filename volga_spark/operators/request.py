@@ -316,7 +316,6 @@ class FeatureService:
         ts_col: str,
         frame,
         agg_builder,
-        cache: bool = True,
         tiebreak: str | list[str] | None = None,
     ):
         self.state = state
@@ -324,7 +323,6 @@ class FeatureService:
         self.ts_col = ts_col
         self.frame = frame
         self.agg_builder = agg_builder
-        self.cache = cache
         self.tiebreak = tiebreak  # orders co-timestamped state (ROWS frames)
         self._cached = False
 
@@ -332,7 +330,7 @@ class FeatureService:
         # repeated lookups re-plan against the same state: pin it in the
         # block cache once so every request batch after the first skips the
         # parquet scan (measured: see SCALING.md request-serving numbers)
-        if self.cache and not self._cached:
+        if not self._cached:
             self.state = self.state.persist()
             self._cached = True
 

@@ -455,7 +455,6 @@ class TiledFeatureService:
         value_col: str,
         frame: RangeFrame,
         granularity: str = "1 minute",
-        cache: bool = True,
         granularities: list[str] | None = None,
     ):
         if not isinstance(frame, RangeFrame):
@@ -487,9 +486,10 @@ class TiledFeatureService:
         self.granularity = (
             self.granularities[0] if self.granularities else granularity
         )
-        self.cache = cache
-        self._cached = False
+        # the pinned serving state and its checkpoint rdd id (close() frees
+        # the blocks by it)
         self._state: DataFrame | None = None
+        self._state_rdd_id: int | None = None
         self._cover_template: DataFrame | None = None
         # per-THREAD batch pins (r12, concurrency probe): a service is one
         # shared cached state serving many callers; releasing "the
@@ -523,19 +523,16 @@ class TiledFeatureService:
         # ~100 near-empty probe tasks per batch. close() releases the
         # blocks by the rdd id the pin returns.
         if self._state is None:
-            st = build_serving_state(
-                self.events,
-                self.tiles,
-                self.key_cols,
-                self.ts_col,
-                self.value_col,
-                self.granularity,
+            self._state, self._state_rdd_id = pin(
+                build_serving_state(
+                    self.events,
+                    self.tiles,
+                    self.key_cols,
+                    self.ts_col,
+                    self.value_col,
+                    self.granularity,
+                )
             )
-            if self.cache:
-                st, rid = pin(st)
-                self._ckpt_rdd_ids = {rid}
-                self._cached = True
-            self._state = st
         if (
             self._cover_template is None
             and self.granularities
@@ -588,14 +585,10 @@ class TiledFeatureService:
 
     def close(self) -> None:
         self._release_batch_pins()
-        if self._cached:
-            # targeted release of the checkpoint blocks captured in
-            # _ensure_cached
+        if self._state is not None:
             release_checkpoint_ids(
-                self.events.sparkSession.sparkContext,
-                getattr(self, "_ckpt_rdd_ids", ()),
+                self.events.sparkSession.sparkContext, {self._state_rdd_id}
             )
-            self._cached = False
         if self._cover_template is not None:
             try:
                 self._cover_template.unpersist()
@@ -1030,7 +1023,6 @@ def auto_feature_service(
     frame: RangeFrame,
     granularity: str = "1 minute",
     threshold: float = 512.0,
-    cache: bool = True,
 ):
     """Pick the serving plan by MEASURED key density (SCALING.md's request-
     serving table): below ``threshold`` expected rows per key-window the
@@ -1081,7 +1073,6 @@ def auto_feature_service(
             value_col=value_col,
             frame=frame,
             granularity=granularity,
-            cache=cache,
             granularities=ladder,
         )
         svc.chosen = "tiled"
@@ -1104,7 +1095,6 @@ def auto_feature_service(
             ts_col=ts_col,
             frame=frame,
             agg_builder=agg_builder,
-            cache=cache,
         )
         svc.chosen = "naive"
     svc.est_rows_per_key_window = density

@@ -1,10 +1,25 @@
-"""SparkSession factory.
+"""SparkSession factory — the one config surface of the engine.
 
-Local test/bench runs use local[$SPARK_GRAFT_CPUS]; on a real cluster the
-same builder config applies (AQE on, Arrow on, UTC). Shuffle partitions
-default to the core count locally — on a 1000-executor cluster this should
-be raised to ~2-3x total cores (AQE coalesces the excess at runtime, so
-over-provisioning is the safe direction at 100 TB).
+Two environment variables describe the deployment, and both are read only
+here:
+
+- ``SPARK_GRAFT_CPUS``: the local core count (``local[N]``), a positive
+  integer; default ``os.cpu_count()``. Anything else raises ``ValueError``
+  before a session is built.
+- ``SPARK_GRAFT_SF_DIR``: the default dataset directory
+  (``DEFAULT_SF_DIR``) for ``bench.py`` and ``scale_probe.py``.
+
+Everything else is Spark conf, set through ``get_spark(extra_conf=...)``,
+which overrides the defaults below. Shuffle partitions default to the core
+count locally — on a 1000-executor cluster pass ``shuffle_partitions`` at
+~2-3x total cores (AQE coalesces the excess at runtime, so
+over-provisioning is the safe direction at 100 TB). Driver memory defaults
+to 60% of physical RAM, capped at 48g. The streaming state store stays
+Spark's HDFS-backed map provider, measured faster than RocksDB locally
+(tiled window at sf0.1 on local[32]: 10.4 s vs 14.4 s, RocksDB pays a
+per-batch instance open and commit); a cluster with millions of keys per
+partition switches to RocksDB with changelog checkpointing through
+``extra_conf`` (see README "Configuration").
 
 Python workers run the volga daemon (``volga_spark.pydaemon``) instead of
 ``pyspark.daemon``: before Python 3.13 every Python task otherwise opens by
@@ -27,6 +42,26 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _env_cpus() -> int:
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 4
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
+def _driver_memory() -> str:
+    """60% of physical RAM, capped at 48g: the driver heap of a local run
+    must leave room for the Python workers and the page cache."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(ram_mb * 6 // 10, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "volga_spark",
     cpus: int | None = None,
@@ -40,18 +75,9 @@ def get_spark(
     mis-size shuffles. Arrow is enabled for the Pandas-UDF slow path.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        cpus = _env_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
-    # Streaming state store provider. Local default: the HDFS-backed map
-    # provider with checkpoints on tmpfs — measured FASTER than RocksDB on
-    # local[32] at sf0.1 (tiled window: 10.4s vs 14.4s; RocksDB pays
-    # per-batch instance open/commit that tmpfs-backed snapshots don't).
-    # CLUSTER default: flip SPARK_GRAFT_STATE_STORE=rocksdb — with millions
-    # of keys per partition the map provider holds the whole state in
-    # executor heap and snapshots it wholesale per commit, while RocksDB
-    # spills to local disk and ships changelogs (see SCALING.md).
-    state_store = os.environ.get("SPARK_GRAFT_STATE_STORE", "hdfs").lower()
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -70,7 +96,7 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         # the streaming memory-sink harness (run_available_now_to_memory)
         # collects whole result sets to the driver; at the 100x scale probe
         # that sits right at the 1g default (measured 1116 MiB). Harness
@@ -82,17 +108,6 @@ def get_spark(
         .config("spark.python.daemon.module", "volga_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
-    if state_store == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ).config(
-            # changelog checkpointing: per-commit upload is O(delta), not
-            # O(state) — the right shape for long-window tiled state
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))

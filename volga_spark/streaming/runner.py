@@ -31,8 +31,8 @@ from pyspark.sql import functions as F
 
 # 8 measured fastest on local[32] at sf0.1 (vs 16: -22% on the stateful
 # sliding query, -20% on streaming agg; vs 4: stateful loses parallelism).
-# On a real cluster size this to ~2-3x total cores via the env var.
-STREAM_SHUFFLE = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+# Per-query widths (the ``width`` argument below) override it.
+STREAM_SHUFFLE = 8
 
 
 def python_handler_width(spark: "SparkSession") -> int:
@@ -93,7 +93,7 @@ def _stream_shuffle(
     nokey = "spark.sql.streaming.noDataMicroBatches.enabled"
     old = spark.conf.get(key)
     old_no = spark.conf.get(nokey, None)
-    spark.conf.set(key, str(width) if width is not None else STREAM_SHUFFLE)
+    spark.conf.set(key, str(width if width is not None else STREAM_SHUFFLE))
     spark.conf.set(nokey, "true" if no_data_batches else "false")
     try:
         yield

@@ -56,7 +56,6 @@ from __future__ import annotations
 
 import math
 import os
-import time
 import uuid
 from bisect import bisect_left, insort
 from collections import Counter
@@ -278,10 +277,6 @@ class _GroupCore:
         # the spill tier for edge sweeps, and interior tiles merged
         self.edge_rows_read = 0
         self.tiles_merged = 0
-        # cumulative on-disk bytes of spill files actually read back from
-        # disk (cache misses only — the per-call cache makes re-touches
-        # free), for the 100x spill-I/O audit (r09 verdict #6)
-        self.spill_bytes_read = 0
 
     # --- state (de)serialization to a flat tuple of lists ------------------
 
@@ -505,12 +500,9 @@ class _GroupCore:
             if hi < b0_lo or lo > b0_hi:
                 continue
             if f not in self._spill_cache:
-                fp = os.path.join(self.spill_path, f)
-                self._spill_cache[f] = pq.read_table(fp).to_pandas()
-                try:
-                    self.spill_bytes_read += os.path.getsize(fp)
-                except OSError:
-                    pass
+                self._spill_cache[f] = pq.read_table(
+                    os.path.join(self.spill_path, f)
+                ).to_pandas()
             pdf = self._spill_cache[f]
             ts = pdf[TS]
             parts.append(pdf[(ts >= b0_lo) & (ts < b0_hi + self.g)])
@@ -1751,64 +1743,11 @@ def tiled_sliding_window_stream(
                 f"q{qid}" if qid else f"plan{plan_token}",
             )
         core.spill_path = os.path.join(root, f"b{bucket[0]}")
-        t0 = time.perf_counter()
         new = pd.concat(list(pdfs), ignore_index=True)
         wm_us = state.getCurrentWatermarkMs() * 1000
-        t1 = time.perf_counter()
         st = core.load(tuple(state.get)) if state.exists else core.empty_state()
-        t2 = time.perf_counter()
         out, st = core.advance(st, new, wm_us)
-        t3 = time.perf_counter()
         state.update(core.dump(st))
-        t4 = time.perf_counter()
-        mpath = os.environ.get("VOLGA_TILED_METRICS")
-        if mpath:
-            # scaling-probe observability (env-gated, off in production):
-            # per (bucket, batch) state composition + live spill bytes, so
-            # the 100× probe can record state/spill curves, not just wall
-            # clock. Single short appended line per call — O_APPEND atomic.
-            import json as _json
-
-            try:
-                sp_files = os.listdir(core.spill_path) if os.path.isdir(
-                    core.spill_path
-                ) else []
-                sp_bytes = sum(
-                    os.path.getsize(os.path.join(core.spill_path, f))
-                    for f in sp_files
-                )
-                with open(mpath, "a") as mf:
-                    mf.write(
-                        _json.dumps(
-                            {
-                                "bucket": int(bucket[0]),
-                                "head_rows": int(len(st["head"][TS])),
-                                "tiles": len(st["tiles"]),
-                                "keys": len(st["cursors"]),
-                                "spill_files": len(sp_files),
-                                "spill_bytes": int(sp_bytes),
-                                "edge_rows_read": int(core.edge_rows_read),
-                                # per-call delta: the counter is cumulative
-                                # per worker-local core, so the delta is
-                                # this (bucket, batch)'s disk re-read
-                                "spill_read_delta": int(
-                                    core.spill_bytes_read
-                                    - getattr(core, "_sbr_prev", 0)
-                                ),
-                                "in_rows": int(len(new)),
-                                "ms_concat": round((t1 - t0) * 1e3, 2),
-                                "ms_load": round((t2 - t1) * 1e3, 2),
-                                "ms_advance": round((t3 - t2) * 1e3, 2),
-                                "ms_dump": round((t4 - t3) * 1e3, 2),
-                            }
-                        )
-                        + "\n"
-                    )
-                core._sbr_prev = core.spill_bytes_read
-            except Exception:
-                # debug-only observability: a drifted state key / missing
-                # attribute here must NEVER kill the streaming query
-                pass
         if out is not None and len(out):
             yield out
 
